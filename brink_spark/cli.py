@@ -56,28 +56,13 @@ def main(argv=None) -> int:
     engine = CrawlEngine(spark, config, args.store, pages=pages, robots=robots)
 
     # graceful stop: finish the in-flight wave, commit, exit (G3)
-    stop = {"flag": False}
-
     def _sig(_s, _f):
         print("signal received: finishing current wave, then stopping", file=log, flush=True)
-        stop["flag"] = True
+        engine.request_stop()
 
     signal.signal(signal.SIGINT, _sig)
     signal.signal(signal.SIGTERM, _sig)
 
-    orig = engine._run_wave
-
-    def guarded(wave, manifest, pages_slim, defer=False):
-        if stop["flag"]:
-            return None
-        out = orig(wave, manifest, pages_slim, defer=defer)
-        if out is None:
-            return None
-        if not defer:  # non-pipelined callers: metrics are durable here
-            print(json.dumps(out), file=log, flush=True)
-        return out
-
-    engine._run_wave = guarded
     # pipelined (defer) waves log POST-COMMIT: the engine invokes this
     # only after the wave's deferred writes and manifest commit land, so
     # a crash during the overlap can never leave a logged wave the store

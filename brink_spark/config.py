@@ -146,19 +146,6 @@ class CrawlConfig:
     # activation the shards are built once from the full visited set.
     bloom_min_visited: int = 100_000
     politeness_salts: int = 8  # two-phase top-k fan-out for hot hosts
-    # page-store cache-pin boundary (synthetic fetch mode only; 0 = off,
-    # the default). When set >0 and the pages table's body bytes exceed
-    # it, the table is repartitioned by the fetch-join key once, persisted,
-    # and joined with a shuffle-hash hint so no wave sorts or re-shuffles
-    # the bodies. MEASURED HONESTLY (BENCH/page_pin_r5.json): at the 3.3 GB
-    # xbench store the fill (scan + shuffle + columnar encode) cost ~164 s
-    # against ~10-15 s/wave of savings — a >10-wave breakeven on this box —
-    # and at broadcastable sizes AQE's per-wave broadcast is already
-    # cheaper. Opt in only for LONG crawls over mid-size stores. The real
-    # at-scale answer is a url_norm-BUCKETED page store (pass
-    # pages_bucketed=True to CrawlEngine): the partitioning is paid once at
-    # WRITE time, where a store crawled many times should pay it.
-    page_pin_bytes: int = 0
     # HTTP-304-style recrawl fast path: when an EXPIRED url is refetched
     # and its body hash equals the stored hash, classify the fetch
     # "not_modified" — the parse stage is skipped (its links were already
@@ -263,7 +250,6 @@ _TOML_KEYS = {
     "retry-misses": "retry_misses",
     "sitemap-discovery": "sitemap_discovery",
     "fetch-partitions": "fetch_partitions",
-    "page-pin-bytes": "page_pin_bytes",
 }
 
 

@@ -39,6 +39,11 @@ from pyspark.sql import functions as F
 # redirect of a request is refused, so at most 9 hops ever resolve.
 MAX_REDIRECT_HOPS = 9
 
+# override rows per partition of the collapsed redirect subset: each row
+# carries a final page payload (body included), so ~4k rows of ~16 KB
+# bodies land near Spark's 64 MB advisory partition size
+OVERRIDE_ROWS_PER_PARTITION = 4096
+
 
 def collapse_redirect_chains(
     pages_slim: DataFrame, norm_udf, max_hops: int = MAX_REDIRECT_HOPS
@@ -79,7 +84,8 @@ def collapse_redirect_chains(
         .observe(obs0, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)  # reused max_hops times below
     )
-    if obs0.get["n"] == 0:
+    n_redirects = obs0.get["n"]
+    if n_redirects == 0:
         return base
 
     # walk: cur starts one hop in; each iteration follows one more redirect.
@@ -118,11 +124,10 @@ def collapse_redirect_chains(
     # join outputs, each carrying a full set of shuffle partitions, so the
     # raw override relation arrives massively over-partitioned for its row
     # count (measured: 320 near-empty partitions for a 147-row override
-    # set — and every wave's fetch join re-scanned all of them). The
-    # redirect subset is never larger than its source, so the source's own
-    # partition count is a size-appropriate ceiling at any scale; coalesce
-    # merges without a shuffle.
-    n_src = max(1, pages_slim.rdd.getNumPartitions())
+    # set — and every wave's fetch join re-scanned all of them). It holds
+    # exactly one row per redirect row, a count obs0 already observed, so
+    # the width follows from the data; coalesce merges without a shuffle.
+    n_parts = -(-n_redirects // OVERRIDE_ROWS_PER_PARTITION)
     overrides = (
         mapping.join(
             base.select(F.col("url_norm").alias("fk"), *payload_cols),
@@ -130,7 +135,7 @@ def collapse_redirect_chains(
             "left",
         )
         .select(F.col("src").alias("url_norm"), *payload_cols)
-        .coalesce(n_src)
+        .coalesce(n_parts)
         .localCheckpoint(eager=True)  # tiny; reused by every wave's fetch join
     )
     return base.unionByName(overrides)

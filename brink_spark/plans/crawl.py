@@ -143,7 +143,11 @@ class CrawlEngine:
         # ArrowEvalPython nodes per frontier scan). The marker forbids the
         # copy, so each frontier row is normalized once. Results are
         # unchanged: the function is pure; the marker only constrains the
-        # optimizer.
+        # optimizer. The marker is engine-wide, not wave-local: redirect
+        # collapse, sitemap discovery, rank reprioritization and the
+        # streaming loop share this UDF, so filter pushdown below it is off
+        # in all of them, and none may use it directly in a join condition
+        # (analysis rejects nondeterministic expressions there).
         self.norm_udf = make_normalize_udf(
             config.ignore_get_parameters, config.fuzzy_get_parameter_checks
         ).asNondeterministic()
@@ -197,6 +201,7 @@ class CrawlEngine:
         # the point where a logged wave can no longer disagree with the
         # store on resume (the CLI's per-wave JSONL line hangs off this)
         self.on_wave_committed = None
+        self._stop_requested = False  # set by request_stop()
 
     def _check_auth_suppression(self, wave: int) -> None:
         """brink.go:177-184: once the jar holds a cookie whose name matches a
@@ -404,6 +409,48 @@ class CrawlEngine:
         )
         return out.limit(limit) if limit is not None else out
 
+    def request_stop(self) -> None:
+        """Ask the current run() to stop before its next wave. Waves already
+        started finish and commit, then run() returns as it does on an empty
+        frontier; resume continues from the next wave. Safe to call from a
+        signal handler or the ``on_wave_committed`` hook."""
+        self._stop_requested = True
+
+    def _prepare_pages(self) -> DataFrame | None:
+        """The fetch-join-ready pages side every wave joins against: the
+        payload columns keyed by ``_fk``, 3xx chains collapsed, prepared once
+        per run (batch run() and StreamingCrawl alike). ``None`` in http
+        mode, where the wave fetches over real sockets."""
+        if self.config.fetch_mode == "http":
+            return None
+        if self.pages is None:
+            raise ValueError("synthetic fetch_mode requires a pages table")
+        cols = self.pages.columns
+        pages_slim = self.pages.select(
+            "url_norm",
+            F.col("status").alias("page_status"),
+            "content_length",
+            "body",
+            *[c for c in ("set_cookie", "redirect_to") if c in cols],
+        )
+        # 3xx chains collapse ONCE per run (Go's http.Client follows
+        # redirects inside Fetch, brink.go:194; operators/redirects.py has
+        # the full semantics) — every wave's fetch join then sees final
+        # payloads under the original url_norm keys
+        pages_slim = collapse_redirect_chains(pages_slim, self.norm_udf)
+        pages_slim = pages_slim.withColumnRenamed("url_norm", "_fk")
+        if self.pages_bucketed:
+            # the table is already hash-bucketed + sorted by url_norm on disk
+            # (sources/corpus.py write_bucketed): the scan reports the
+            # co-located layout, so every wave's join exchanges and sorts
+            # ONLY the frontier side. Materializing would destroy the layout.
+            return pages_slim
+        # default: materialize once (kills the per-wave recompute — in
+        # fixture mode each wave would re-serialize the table from the
+        # driver) and let AQE pick the per-wave strategy (broadcast at
+        # small sizes).
+        return pages_slim.localCheckpoint(eager=True)
+
     def run(
         self,
         fixture=None,
@@ -606,77 +653,7 @@ class CrawlEngine:
         if self._budgets is not None:
             self._budgets = self._budgets.localCheckpoint(eager=True)
 
-        self._pages_pin = None
-        if self.pages is not None:
-            cookie_cols = ["set_cookie"] if "set_cookie" in self.pages.columns else []
-            redirect_cols = (
-                ["redirect_to"] if "redirect_to" in self.pages.columns else []
-            )
-            pages_slim = self.pages.select(
-                "url_norm",
-                F.col("status").alias("page_status"),
-                "content_length",
-                "body",
-                *cookie_cols,
-                *redirect_cols,
-            )
-            # 3xx chains collapse ONCE per run (Go's http.Client follows
-            # redirects inside Fetch, brink.go:194; operators/redirects.py
-            # has the full semantics) — every wave's fetch join then sees
-            # final payloads under the original url_norm keys
-            pages_slim = collapse_redirect_chains(pages_slim, self.norm_udf)
-            # Per-wave fetch-join regime for the pages side (the BIG side,
-            # touched every wave):
-            #   - bucketed store (pages_bucketed=True): the table is
-            #     already hash-bucketed + sorted by url_norm on disk
-            #     (sources/corpus.py write_bucketed) — the at-scale answer:
-            #     the scan itself reports the co-located layout, so every
-            #     wave's join exchanges and sorts ONLY the frontier side,
-            #     and the partitioning was paid once at write time. Leave
-            #     the scan untouched (materializing would destroy the
-            #     layout).
-            #   - cache pin (page_pin_bytes > 0 and the store exceeds it):
-            #     repartition by the join key + persist() (which, unlike
-            #     localCheckpoint, keeps the cached plan's HashPartitioning)
-            #     + shuffle-hash hint. Opt-in: the fill cost needs a long
-            #     crawl to amortize — see config.page_pin_bytes for the
-            #     measured regime boundaries.
-            #   - default: localCheckpoint once (kills the per-wave
-            #     recompute — in fixture mode each wave would re-serialize
-            #     the table from the driver) and let AQE pick the per-wave
-            #     strategy (broadcast at small sizes).
-            pages_slim = pages_slim.withColumnRenamed("url_norm", "_fk")
-            self._pages_hint = False
-            # BRINK_NO_PAGE_PIN is the measurement escape hatch for A/B
-            # benchmarking this whole block; never set it in production
-            if self.pages_bucketed or os.environ.get("BRINK_NO_PAGE_PIN"):
-                pass
-            elif self.config.page_pin_bytes > 0 and (
-                pages_slim.agg(
-                    F.sum(F.coalesce(F.length("body"), F.lit(0)))
-                ).collect()[0][0]
-                or 0
-            ) > self.config.page_pin_bytes:
-                n_pages_parts = self.fetch_partition_count() or max(
-                    int(
-                        self.spark.conf.get(
-                            "spark.sql.shuffle.partitions", "200"
-                        )
-                    ),
-                    self.spark.sparkContext.defaultParallelism,
-                )
-                pages_slim = pages_slim.repartition(
-                    n_pages_parts, "_fk"
-                ).persist()
-                pages_slim.count()  # fill the cache before the wave loop
-                self._pages_pin = pages_slim
-                self._pages_hint = True
-            else:
-                pages_slim = pages_slim.localCheckpoint(eager=True)
-        elif self.config.fetch_mode == "http":
-            pages_slim = None  # real sockets; no synthetic pages table
-        else:
-            raise ValueError("synthetic fetch_mode requires a pages table")
+        pages_slim = self._prepare_pages()
 
         # HTTP-304-style fast path: bind the expired-entry hash set for
         # this run (bounded by the tombstone count; localCheckpoint so the
@@ -715,6 +692,8 @@ class CrawlEngine:
         K = self.config.rank_priority_every
         try:
             while wave < max_waves:
+                if self._stop_requested:  # request_stop(): as an empty frontier
+                    break
                 if K > 0 and wave > 0 and wave % K == 0:
                     _join_pending()  # rank boundary reads deferred results
                 out = self._run_wave(wave, manifest, pages_slim, defer=True)
@@ -760,6 +739,7 @@ class CrawlEngine:
                     _join_pending()
                     self.store.compact_visited(self.spark, manifest)
                 wave += 1
+            _join_pending()
         except BaseException as loop_err:
             # primary failure mid-loop must still JOIN the in-flight
             # finalize thread for the PREVIOUS wave — a daemon commit
@@ -774,14 +754,9 @@ class CrawlEngine:
                 raise loop_err from pending_err[0]
             raise
         finally:
-            # release the pinned page-store cache whether the loop finished
-            # or raised (long sessions run many engines; leaked caches
-            # accumulate in the block manager)
-            if getattr(self, "_pages_pin", None) is not None:
-                self._pages_pin.unpersist()
-                self._pages_pin = None
+            # a stop request ends this run only, however the run ends
+            self._stop_requested = False
 
-        _join_pending()
         manifest.done = True
         self.store.commit(manifest)
         summary.waves = wave
@@ -1276,7 +1251,7 @@ class CrawlEngine:
         finish(), so an interrupted overlap leaves wave N (and any N+1
         partials) uncommitted and clean_uncommitted recomputes them.
         ``defer=False`` preserves the fully synchronous contract for
-        direct callers (streaming loop, CLI wrapper).
+        direct callers (the streaming loop).
 
         The ``wavestage`` scratch table (edge grain): normalize ->
         seen-split (Bloom prefilter + exact joins) -> per-unit edge
@@ -1484,18 +1459,13 @@ class CrawlEngine:
             # normalized URL can collide with (\x00 prefix) instead of
             # NULL — nulls would pile every cached/deferred edge of the
             # wave into one join partition (skew); the prefixed key keeps
-            # the shuffle uniform while never matching a page
-            # pages_slim arrives fetch-join-ready: keyed by _fk, materialized
-            # (and, when big, pre-shuffled + pinned) once per run — see
-            # run()'s page-store setup
-            pages_j = pages_slim
-            probe = combined.withColumn("_fk", wx.fk_expr)
-            if getattr(self, "_pages_hint", False):
-                # pinned regime: shuffle-hash with the FRONTIER as the
-                # build side — pages streams straight out of its
-                # partitioned cache, no sort, no exchange
-                probe = probe.hint("shuffle_hash")
-            joined = probe.join(pages_j, "_fk", "left").drop("_fk")
+            # the shuffle uniform while never matching a page.
+            # pages_slim arrives fetch-join-ready (_prepare_pages)
+            joined = (
+                combined.withColumn("_fk", wx.fk_expr)
+                .join(pages_slim, "_fk", "left")
+                .drop("_fk")
+            )
             # NO re-salt here: the equi-join already hash-distributes the
             # wave by _fk (≈url_norm), so a mega-host's pages spread
             # uniformly and the parse runs in the join's own reduce stage

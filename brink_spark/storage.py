@@ -62,7 +62,6 @@ class CrawlStore:
         "metrics",
         "bloom",
         "fetchlog",
-        "edges",  # legacy (pre-fused) scratch name; still cleaned on resume
         "fetchpage",  # written by the standalone fetch_stage harness path
         "wavestage",  # the fused per-wave scratch (edge grain + fetch cols)
         "ranks",

@@ -23,7 +23,6 @@ import os
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.types import BooleanType, StructField, StructType
 
-from brink_spark.operators.redirects import collapse_redirect_chains
 from brink_spark.plans.crawl import FRONTIER_SCHEMA, CrawlEngine
 
 
@@ -91,26 +90,8 @@ class StreamingCrawl:
         drains — the module's stated use case: NEW seed batches may arrive
         (``seed(...)``) at any time, including after idle, and the crawl
         resumes from the accumulated visited state."""
-        redirect_cols = (
-            ["redirect_to"] if "redirect_to" in self.engine.pages.columns else []
-        )
-        # _run_wave expects a fetch-join-ready pages side: keyed by _fk and
-        # materialized once (the same contract run()'s page-store setup
-        # establishes for the batch loop)
-        self._pages_slim = (
-            collapse_redirect_chains(
-                self.engine.pages.select(
-                    "url_norm",
-                    F.col("status").alias("page_status"),
-                    "content_length",
-                    "body",
-                    *redirect_cols,
-                ),
-                self.engine.norm_udf,
-            )
-            .withColumnRenamed("url_norm", "_fk")
-            .localCheckpoint(eager=True)
-        )
+        # the same fetch-join-ready pages side the batch run() prepares
+        self._pages_slim = self.engine._prepare_pages()
         if seeds_df is not None:
             self.seed(seeds_df)
         # fresh StructType: StructType.add MUTATES the receiver, so adding

@@ -4,6 +4,7 @@ basic-auth header (factory.go:186-193) and session-cookie suppression
 (brink.go:177-184)."""
 
 import base64
+import os
 
 from brink_spark.config import (
     AUTH_BASIC,
@@ -91,8 +92,8 @@ value = "zzz"
 
 
 def test_reference_example_conf_loads_fully():
-    """The reference's own example config (cmd/example-conf.toml) loads with
-    every key mapped — including url-buffer-size / worker-count /
+    """The reference's example config (cmd/example-conf.toml, vendored as
+    tests/fixtures/example-conf.toml) loads with every key mapped — including url-buffer-size / worker-count /
     idle-work-check-interval (crawler.go:53-62, wave-model mappings
     documented on CrawlConfig) and the 'forbidden-paths' spelling the
     reference's own tag ('ignore-path-visits') would silently drop."""
@@ -100,7 +101,9 @@ def test_reference_example_conf_loads_fully():
 
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # any unknown-key warning = failure
-        cfg = from_toml("/root/reference/cmd/example-conf.toml")
+        cfg = from_toml(
+            os.path.join(os.path.dirname(__file__), "fixtures", "example-conf.toml")
+        )
     assert cfg.entrypoint == "http://example.com"
     assert cfg.url_buffer_size == 150000
     assert cfg.worker_count == 10

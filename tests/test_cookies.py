@@ -193,3 +193,36 @@ def test_resume_restores_cookie_jar(spark, cookie_fixture, tmp_path):
     assert eng2.cookie_jar == full.cookie_jar
     assert eng2.auth_suppressed_since_wave == full.auth_suppressed_since_wave
     assert "Authorization" not in eng2.request_headers()
+
+
+def test_streaming_crawl_keeps_the_cookie_jar(spark, cookie_fixture, tmp_path):
+    """The streaming loop joins the same pages side as the batch run()
+    (set_cookie included), so one micro-batch per wave accumulates the same
+    jar and visits the same keys."""
+    from brink_spark.sources.sitegen import (
+        pages_to_spark,
+        robots_to_spark,
+        seeds_to_spark,
+    )
+    from brink_spark.streaming.frontier_stream import StreamingCrawl
+
+    batch = CrawlEngine(spark, cookie_fixture.config, str(tmp_path / "batch"))
+    batch.run(fixture=cookie_fixture)
+
+    engine = CrawlEngine(
+        spark,
+        cookie_fixture.config,
+        str(tmp_path / "stream"),
+        pages=pages_to_spark(spark, cookie_fixture),
+        robots=robots_to_spark(spark, cookie_fixture),
+    )
+    StreamingCrawl(engine).run_until_drained(
+        spark, seeds_to_spark(spark, cookie_fixture)
+    )
+    assert engine.cookie_jar == batch.cookie_jar
+
+    def keys(eng):
+        man = eng.store.read_manifest()
+        return {r["url_norm"] for r in eng.store.read_visited(spark, man).collect()}
+
+    assert keys(engine) == keys(batch)

@@ -1,20 +1,14 @@
-"""Page-store fetch-join regimes. run() materializes the pages table once
-and joins it every wave; the regime decides what the pages side pays:
+"""Page-store fetch-join regimes. CrawlEngine._prepare_pages() prepares
+the pages table once per run and every wave joins it; the regime decides
+what the pages side pays:
 
 - default: localCheckpoint once, AQE picks per-wave strategy (broadcast at
   small sizes).
-- cache pin (opt-in, config.page_pin_bytes > 0): repartition by the join
-  key + persist (the cached plan keeps its HashPartitioning —
-  localCheckpoint does NOT, it reports UnknownPartitioning on readback) +
-  shuffle-hash hint building from the frontier, so the pinned side streams
-  with no sort and no exchange.
 - bucketed store (pages_bucketed=True): the at-scale answer — the on-disk
   layout (write_bucketed by url_norm) already co-locates the join, paid
   once at write time.
 
-Plan-asserted mechanisms + engine-level output parity across all regimes."""
-
-import os
+Plan-asserted mechanism + engine-level output parity across both regimes."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -30,51 +24,13 @@ def _final_plan(df) -> str:
 
 def _join_exchanges(df) -> int:
     """ENSURE_REQUIREMENTS exchanges in the final adaptive plan — the ones
-    the join itself forces. Excludes a pinned cache's internal
-    REPARTITION_BY_NUM (executed once at cache fill, not per join) and the
-    '== Initial Plan ==' echo AQE appends to toString()."""
+    the join itself forces. Excludes the '== Initial Plan ==' echo AQE
+    appends to toString()."""
     return sum(
         1
         for ln in _final_plan(df).splitlines()
         if "ENSURE_REQUIREMENTS" in ln and "ReusedExchange" not in ln
     )
-
-
-def test_pinned_side_joins_without_its_own_exchange_or_sort(spark):
-    big = (
-        spark.range(0, 20_000)
-        .select(
-            F.concat(F.lit("u"), F.col("id")).alias("_fk"),
-            F.repeat(F.lit("x"), 200).alias("body"),
-        )
-        .repartition(8, "_fk")
-        .persist()
-    )
-    big.count()
-    probe = spark.range(0, 500).select(
-        F.concat(F.lit("u"), F.col("id") * 3).alias("_fk")
-    )
-    # force the non-broadcast regime (the pin only ever engages on stores
-    # far past the broadcast threshold)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = probe.hint("shuffle_hash").join(big, "_fk", "left")
-        joined.collect()
-        final = _final_plan(joined)
-        # the hint lands: shuffled-hash join with the PROBE as build side,
-        # so the pinned side streams with no Sort
-        assert "ShuffledHashJoin" in final
-        assert "Sort" not in final
-        # exactly ONE join-forced exchange: the probe side shuffling to the
-        # pinned layout. If persist dropped the HashPartitioning (as
-        # localCheckpoint does) the big side would re-exchange -> 2.
-        assert _join_exchanges(joined) == 1
-        # the pin is a layout change, not a semantic one
-        assert joined.filter(F.col("body").isNotNull()).count() == 500
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        big.unpersist()
 
 
 def test_bucketed_pages_join_exchanges_only_the_probe(spark, tmp_path):
@@ -130,47 +86,24 @@ def test_all_page_regimes_agree(spark, tmp_path):
         path=str(tmp_path / "bpages"),
     )
     visited = {}
-    # pinned (page_pin_bytes=1 forces the pin on the tiny fixture),
-    # checkpointed (the default regime), raw (escape hatch), bucketed
     try:
-        for mode, cfg, kw in (
-            ("pin", fx.config.with_(page_pin_bytes=1), {}),
-            ("ckpt", fx.config, {}),
-            ("raw", fx.config, {}),
-            (
-                "bucketed",
-                fx.config,
-                dict(pages=spark.table("bk_pages_e"), pages_bucketed=True),
-            ),
+        for mode, kw in (
+            ("ckpt", {}),
+            ("bucketed", dict(pages=spark.table("bk_pages_e"), pages_bucketed=True)),
         ):
-            os.environ.pop("BRINK_NO_PAGE_PIN", None)
-            if mode == "raw":
-                os.environ["BRINK_NO_PAGE_PIN"] = "1"
-            try:
-                eng = CrawlEngine(spark, cfg, str(tmp_path / mode), **kw)
-                eng.run(fixture=fx, max_waves=4)
-                man = eng.store.read_manifest()
-                rows = (
-                    eng.store.read_asof(spark, "visited", man.last_wave)
-                    .select("url_norm", "wave")
-                    .collect()
-                )
-                visited[mode] = sorted(
-                    (r["url_norm"], r["wave"]) for r in rows
-                )
-                if mode == "pin":  # the cache must not leak past run()
-                    assert eng._pages_pin is None
-            finally:
-                os.environ.pop("BRINK_NO_PAGE_PIN", None)
+            eng = CrawlEngine(spark, fx.config, str(tmp_path / mode), **kw)
+            eng.run(fixture=fx, max_waves=4)
+            man = eng.store.read_manifest()
+            rows = (
+                eng.store.read_asof(spark, "visited", man.last_wave)
+                .select("url_norm", "wave")
+                .collect()
+            )
+            visited[mode] = sorted((r["url_norm"], r["wave"]) for r in rows)
     finally:
         spark.sql("DROP TABLE IF EXISTS bk_pages_e")
-    assert (
-        visited["pin"]
-        == visited["ckpt"]
-        == visited["raw"]
-        == visited["bucketed"]
-    )
-    assert len(visited["pin"]) > 0
+    assert visited["ckpt"] == visited["bucketed"]
+    assert len(visited["ckpt"]) > 0
 
 
 def test_bucketed_mode_rejects_uncollapsed_redirects(spark, tmp_path):

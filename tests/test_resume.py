@@ -90,3 +90,29 @@ def test_asof_snapshot_table_returns_single_wave(spark, asof_run):
     r_last = engine.store.read_asof(spark, "results", waves - 1).count()
     r_first = engine.store.read_asof(spark, "results", 0).count()
     assert r_last >= r_first
+
+
+def test_request_stop_ends_run_and_resume_continues(spark, tiny_fixture, tmp_path):
+    """request_stop() from the post-commit hook ends the run before the next
+    wave, as an empty frontier would; resume picks up at the next wave and
+    reaches the uninterrupted crawl's result."""
+    waves = 3
+    cfg = tiny_fixture.config.with_(pipeline_waves=False)
+    oracle = crawl_oracle(tiny_fixture, cfg.with_(max_waves=waves))
+    store_dir = str(tmp_path / "store")
+    engine = CrawlEngine(spark, cfg, store_dir)
+
+    def stop_once(m):
+        engine.on_wave_committed = None
+        engine.request_stop()
+
+    engine.on_wave_committed = stop_once
+    s1 = engine.run(fixture=tiny_fixture, max_waves=waves)
+    assert s1.waves == 1
+    assert engine.store.read_manifest().last_wave == 0
+
+    s2 = engine.run(fixture=tiny_fixture, resume=True, max_waves=waves)
+    assert [m["wave"] for m in s2.wave_metrics] == [1, 2]
+    assert engine.store.read_manifest().last_wave == waves - 1
+    cmp = compare_engine_oracle(spark, engine, oracle)
+    assert cmp.all_match, cmp.detail

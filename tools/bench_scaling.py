@@ -177,7 +177,7 @@ def run_level(cpus: int) -> dict:
 
     # BRINK_PAGES_BUCKETED=1: the at-scale page-store regime — the wave's
     # fetch join reads a url_norm-bucketed + sorted on-disk table, so the
-    # pages side never exchanges or sorts (BENCH/page_pin_r5.json). The
+    # pages side never exchanges or sorts (BENCH/scaling_bucketed_r5.json). The
     # bucket write happens here, OUTSIDE the timed window, exactly as a
     # production store pays its layout once at write time; each level
     # process builds its own catalog entry (per-process session catalog).
