@@ -132,14 +132,9 @@ class CrawlConfig:
     # bench.py's pipelined-vs-sync A/B and as a debugging fallback.
     pipeline_waves: bool = True
     use_bloom: bool = True
-    # which approximate seen-filter backs the prefilter when active:
-    # 'bloom' (operators/seen.py) or 'cuckoo' (operators/cuckoo.py — same
-    # sharded-cogroup shape plus exact deletion for recrawl/expiry)
-    seen_filter: str = "bloom"
     bloom_shards: int = 16
     bloom_bits_per_shard: int = 1 << 20
     bloom_num_hashes: int = 5
-    cuckoo_buckets_per_shard: int = 1 << 16  # power of two; 4 slots/bucket
     # adaptive activation: the Bloom prefilter pays one Arrow cogroup pass
     # per wave and only wins when the exact anti-join's build side is big —
     # activate once total visited crosses this (0 = always on). On
@@ -179,10 +174,6 @@ class CrawlConfig:
         if self.politeness_key not in ("host", "site"):
             raise ValueError(
                 f"politeness_key must be 'host' or 'site', got {self.politeness_key!r}"
-            )
-        if self.seen_filter not in ("bloom", "cuckoo"):
-            raise ValueError(
-                f"seen_filter must be 'bloom' or 'cuckoo', got {self.seen_filter!r}"
             )
         if self.fetch_mode not in ("synthetic", "http"):
             raise ValueError(

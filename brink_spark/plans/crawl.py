@@ -151,24 +151,17 @@ class CrawlEngine:
         self.norm_udf = make_normalize_udf(
             config.ignore_get_parameters, config.fuzzy_get_parameter_checks
         ).asNondeterministic()
-        # the approximate seen-prefilter ("bloom" attribute name kept for
-        # the store table + adaptive-activation plumbing, which is shared):
-        # Bloom (default) or cuckoo — the latter supports exact deletion
-        # (visited-entry expiry for recrawl), same probe/updated surface
-        if not config.use_bloom:
-            self.bloom = None
-        elif config.seen_filter == "cuckoo":
-            from brink_spark.operators.cuckoo import CuckooSeenSet
-
-            self.bloom = CuckooSeenSet(
-                config.bloom_shards, config.cuckoo_buckets_per_shard
-            )
-        else:
-            self.bloom = BloomSeenSet(
+        # the approximate seen-prefilter (sharded Bloom); None when
+        # use_bloom is off, in which case mark_seen is exact-join only
+        self.bloom = (
+            BloomSeenSet(
                 config.bloom_shards,
                 config.bloom_bits_per_shard,
                 config.bloom_num_hashes,
             )
+            if config.use_bloom
+            else None
+        )
         self._rules = robots_rules_per_host(robots) if robots is not None else None
         self._budgets = budget_per_host(robots, config.politeness_budget)
         # cumulative (host, _taken) fetch-attempt counts — the
@@ -265,25 +258,13 @@ class CrawlEngine:
         seen set. A tombstone (url_norm, expired_asof_wave=last committed
         wave) drops every visited row at or below it, so the next encounter
         FETCHES again and the re-fetch (higher wave) wins over the
-        tombstone. With the cuckoo filter the fingerprints are also deleted
-        from the shard tables (exact — that is what the cuckoo option is
-        for); with Bloom the stale bits stay set and expired URLs merely
-        pay the exact-join fallthrough (never incorrect). Time-travel
+        tombstone. The Bloom shards keep the expired URLs' bits: a stale
+        positive only falls through to the exact join against visited,
+        which the tombstone already filters (never incorrect). Time-travel
         reads keep showing pre-expiry history; compaction materializes the
         post-expiry state and clears covered tombstones."""
-        from brink_spark.operators.cuckoo import CuckooSeenSet
-
         manifest = self.store.read_manifest() or Manifest()
         self.store.write_tombstones(urls, manifest.last_wave)
-        if (
-            isinstance(self.bloom, CuckooSeenSet)
-            and manifest.last_wave >= 0
-            and self.store.has("bloom", manifest.last_wave)
-        ):
-            shards = self.store.read(self.spark, "bloom", manifest.last_wave)
-            self.store.rewrite(
-                self.bloom.deleted(urls, shards), "bloom", manifest.last_wave
-            )
 
     def recrawl_order(self, limit: int | None = None) -> DataFrame:
         """Freshness-driven recrawl schedule (Cho & Garcia-Molina change-rate

@@ -1336,7 +1336,7 @@ def q_graph_reachability(spark, sf):
     (node % 50 == 0) over the synthesized link graph; each hop is one
     semi-join + anti-join against the accumulated reach set, the
     distributed BFS step (at 10^10 nodes the anti-join side is the
-    Bloom/cuckoo seen set, operators/seen.py — same shape). Output:
+    Bloom seen set, operators/seen.py — same shape). Output:
     per-hop node counts plus a sum-of-node-ids checksum so the driver
     hash pins membership, not just cardinality."""
     e = _t(spark, sf, "events")

@@ -5,7 +5,7 @@ exact distinct/quantile state would not fit.
 Why these are the scale path: a sketch aggregate is a commutative monoid,
 so Spark's partial aggregation applies — each map task reduces its rows to
 ONE ~4 KiB sketch per group and the shuffle moves sketches, not values
-(the same reason the crawl engine's seen-set uses sharded Bloom/cuckoo
+(the same reason the crawl engine's seen-set uses sharded Bloom
 blocks, operators/seen.py). `hll_union_agg` then merges the partials
 anywhere: across partitions, across days, across bucketed stores.
 

@@ -51,6 +51,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+    )
+    if master != "inherit":
         # Commit algorithm v2: task output moves to the destination at task
         # commit instead of being renamed again file-by-file at job commit
         # (a DRIVER-serial loop). The wave loop commits 5 small tables per
@@ -58,9 +60,11 @@ def get_spark(
         # weaker failure contract (a failed job can leave partial files) is
         # already handled by the store's manifest protocol — a wave dir
         # without _SUCCESS is never read and is recomputed on resume.
-        .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-    )
-    if master != "inherit":
+        # v2's non-atomic task commit is safe only without speculation or
+        # task retries mid-commit, so cluster deploys keep v1.
+        builder = builder.config(
+            "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2"
+        )
         # In-process local masters: Python workers fork from
         # brink_spark.pydaemon, which preloads numpy/pandas/pyarrow so
         # copy-on-write forks skip the per-worker import storm after the

@@ -51,7 +51,7 @@ class Manifest:
 
 
 class CrawlStore:
-    # edges/fetchpage are the per-wave materialized stage tables (scratch):
+    # wavestage/fetchpage are the per-wave materialized stage tables (scratch):
     # deep DAGs are evaluated exactly once into them and every output table
     # is a flat projection — keeps Catalyst planning out of the wave's
     # critical path and doubles as wave-level debuggability
@@ -214,7 +214,7 @@ class CrawlStore:
         return self._apply_tombstones(spark, spark.read.parquet(*paths))
 
     # tables whose per-wave dirs form an append log, so 'state as of wave K'
-    # = union of dirs 0..K. frontier / edges / fetchpage / bloom are
+    # = union of dirs 0..K. frontier / wavestage / fetchpage / bloom are
     # SNAPSHOT-per-wave tables (each wave's dir supersedes the previous) —
     # unioning those would mix superseded states.
     APPEND_TABLES = ("visited", "results", "fetchlog", "metrics")

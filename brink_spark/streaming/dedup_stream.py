@@ -10,7 +10,7 @@ increment.
 
 State sizing at scale: ``dropDuplicates`` keeps one state row per distinct
 key forever, which at 10^10 documents is exactly the problem the crawl
-engine's sharded Bloom/cuckoo seen set solves (operators/seen.py) — so for
+engine's sharded Bloom seen set solves (operators/seen.py) — so for
 bounded state pass ``ts_col``: the watermark lets Spark expire keys older
 than ``delay`` (``dropDuplicatesWithinWatermark``), the right contract
 when duplicates cluster in time (recrawls, mirror bursts). Unbounded mode

@@ -1,13 +1,13 @@
-"""Visited-entry expiry + recrawl (the reason the cuckoo filter exists:
-the reference's seen map is mutable, store/store.go:22-42). Contract:
+"""Visited-entry expiry + recrawl (the reference's seen map is mutable,
+store/store.go:22-42). Expiry is tombstones only. Contract:
 
 - expire_visited(urls) drops those urls from the LIVE seen set; the next
   encounter FETCHES again (cached=False) and the re-fetch wins (a later
   wave beats the tombstone);
 - non-expired pages stay cached (control);
-- with seen_filter='cuckoo' the fingerprints are deleted from the shard
-  tables too, so the prefilter stays tight (Bloom keeps stale bits and
-  just pays the exact-join fallthrough — still correct);
+- the Bloom prefilter (on from wave 0 here) keeps the expired urls' stale
+  bits; a stale positive just falls through to the exact join against the
+  tombstoned visited set — still correct;
 - compaction materializes the post-expiry state and clears tombstones.
 """
 
@@ -45,8 +45,7 @@ def chain_fixture():
     ]
     cfg = CrawlConfig(
         "https://x.example/a", max_waves=20,
-        seen_filter="cuckoo", bloom_min_visited=0,
-        cuckoo_buckets_per_shard=1 << 10,
+        bloom_min_visited=0,
     )
     return SiteFixture(
         scale="expiry", seed=0, pages=pages,
@@ -78,28 +77,32 @@ def _recrawl(spark, fixture, cfg, store_dir, expire_b: bool):
     eng2 = CrawlEngine(spark, cfg, store_dir)
     seeds = spark.createDataFrame([(b_norm, 0)], "url string, priority int")
     eng2.run(fixture=fixture, resume=True, seeds=seeds)
-    man2 = eng2.store.read_manifest()
+    recrawl_waves = range(first_waves, eng2.store.read_manifest().last_wave + 1)
     rows = [
         r
-        for w in range(first_waves, man2.last_wave + 1)
+        for w in recrawl_waves
         if eng2.store.has("results", w)
         for r in eng2.store.read(spark, "results", w)
         .filter(F.col("url_norm") == b_norm)
         .collect()
     ]
-    return rows
+    return rows, eng2, recrawl_waves
 
 
 def test_expired_url_is_refetched(spark, chain_fixture, tmp_path):
-    rows = _recrawl(
+    rows, eng2, recrawl_waves = _recrawl(
         spark, chain_fixture, chain_fixture.config, str(tmp_path / "s1"), True
     )
+    # the recrawl ran on the Bloom path (not exact-only): every wave wrote
+    # its shards, so b's stale bits were probed and fell through
+    assert len(recrawl_waves) > 0
+    assert all(eng2.store.has("bloom", w) for w in recrawl_waves)
     assert len(rows) == 1 and rows[0]["cached"] is False  # real re-fetch
     assert rows[0]["spans"] is not None and len(rows[0]["spans"]) > 0
 
 
 def test_unexpired_url_stays_cached(spark, chain_fixture, tmp_path):
-    rows = _recrawl(
+    rows, _, _ = _recrawl(
         spark, chain_fixture, chain_fixture.config, str(tmp_path / "s2"), False
     )
     assert len(rows) == 1 and rows[0]["cached"] is True  # control: cached
@@ -130,6 +133,10 @@ def test_refetch_wins_over_tombstone(spark, chain_fixture, tmp_path):
         .collect()
     ]
     assert len(rows) == 1 and rows[0]["cached"] is True
+    # the re-fetched b and its original row must not both be live: the
+    # tombstone hides the old one, so url_norm stays unique in visited
+    live = eng.store.read_visited(spark, man2)
+    assert live.count() == live.select("url_norm").distinct().count()
 
 
 def test_compaction_materializes_expiry_and_clears_tombstones(

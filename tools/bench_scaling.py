@@ -37,11 +37,12 @@ TEMPLATE = f"{WORK}/store_template"
 PAGES = f"{WORK}/pages.parquet"
 ROBOTS = f"{WORK}/robots.parquet"
 CONFIG = f"{WORK}/config.json"
-# N and 4N. 4→16 rather than 8→32 because the box's 32 "cpus" include SMT
-# siblings: a pure-CPU spin test yields only ~3.3x from 8→32 procs (hard
-# ceiling 0.82 efficiency) but ~3.6-3.9x from 4→16.
+# N and 4N from the host: 4N is every cpu, N a quarter of them (1→4 on a
+# 4-core host, 4→16 on 16). BRINK_LEVELS overrides the pair.
+NCPU = os.cpu_count() or 1
 LEVELS = tuple(
-    int(x) for x in os.environ.get("BRINK_LEVELS", "4,16").split(",")
+    int(x)
+    for x in os.environ.get("BRINK_LEVELS", f"{max(1, NCPU // 4)},{NCPU}").split(",")
 )
 VISITED_FRACTION = 4  # 1-in-4 pages prefilled as already-visited
 
@@ -63,7 +64,7 @@ def prepare() -> None:
     print(f"# fixture: {len(fx.pages)} pages in {time.time()-t0:.1f}s", file=sys.stderr)
 
     spark = get_spark(
-        "local[32]", app_name="scaling_prepare", shuffle_partitions=64,
+        f"local[{NCPU}]", app_name="scaling_prepare", shuffle_partitions=64,
         extra={
             "spark.ui.showConsoleProgress": "false",
             "spark.local.dir": f"{WORK}/spark-local-prep",
