@@ -11,7 +11,7 @@ the span parse, and the cookie-jar reduction run unchanged.
 
 Execution shape (CONCURRENT kernel):
 - the fetch stage is already repartitioned by a salted host hash
-  (plans/crawl.py fetch_stage), so a partition holds mostly-same-host
+  (plans/crawl.py _fetch_parse), so a partition holds mostly-same-host
   URLs. Within a batch, URLs are grouped by netloc; each netloc group is
   fetched SERIALLY in url order on one worker (per-host ordering +
   connection reuse — one keep-alive connection per (scheme, netloc) per

@@ -25,11 +25,12 @@ Scale notes (the 10^10 design point):
   hot-host skew never concentrates a join partition;
 - the only host-keyed operation is the politeness window, which is
   salted two-phase top-k (operators/politeness.py);
-- the parse stage is explicitly repartitioned by a salted host hash
-  (``pmod(xxhash64(host, url_norm), P)``) — in production this stage is
-  the ``mapInPandas`` HTTP fetch, and the salt keeps one mega-host from
-  serializing a wave while still co-locating mostly-same-host batches for
-  connection reuse;
+- the fetch+parse stage (``CrawlEngine._fetch_parse``): in synthetic mode
+  the parse runs in the pages equi-join's own reduce stage, already spread
+  by ``url_norm``; the raw ``xxhash64(host, url_norm)`` salt repartitions
+  it only in http mode (before the ``mapInPandas`` socket fetch, so one
+  mega-host cannot serialize a wave while batches stay mostly same-host
+  for connection reuse) or when ``fetch_partition_count() > 0``;
 - visited is append-only with periodic compaction; the Bloom prefilter
   keeps the anti-join's build side tiny regardless of |visited|.
 """
@@ -744,94 +745,6 @@ class CrawlEngine:
         summary.wall_seconds = time.time() - t0
         return summary
 
-    def fetch_stage(self, wave: int, edges: DataFrame, pages_slim: DataFrame) -> None:
-        """The fetch/parse stage (A1/H4 + C1/C2 gates + D1 parse): eligible
-        units equi-joined against pages, outcome-gated, host-salt
-        repartitioned, spans parsed, written as the ``fetchpage`` scratch
-        table. In production this is the mapInPandas HTTP fetch; the salt
-        keeps one mega-host from serializing a wave while co-locating
-        same-host batches for connection reuse. Exposed standalone because
-        fetch throughput is the north-rule scaling metric."""
-        cfg = self.config
-        eligible_units = edges.filter(
-            (F.col("edge_kind") == "fresh")
-            & (F.col("_edge_rank") == 1)
-            & F.col("eligible")
-        )
-        if cfg.fetch_mode == "http":
-            # production shape: repartition by the host salt FIRST so the
-            # mapInPandas fetch sees mostly-same-host batches (connection
-            # reuse), then fetch over real sockets
-            from brink_spark.operators.http_fetch import http_fetch_columns
-
-            n_parts0 = self.fetch_partition_count()
-            salt0 = F.xxhash64("host", "url_norm")
-            eligible_units = (
-                eligible_units.repartition(n_parts0, salt0)
-                if n_parts0 > 0
-                else eligible_units.repartition(salt0)
-            )
-            fetched = http_fetch_columns(
-                eligible_units,
-                self.request_headers(),
-                cfg.http_timeout,
-                pool_size=cfg.http_pool_size,
-            )
-        else:
-            fetched = eligible_units.join(pages_slim, "url_norm", "left")
-        fetched = fetched.withColumn(
-            "outcome",
-            F.when(F.col("page_status").isNull(), "miss")
-            .when(
-                ~domain_allowed(F.col("scheme"), F.col("host"), self.allowed_keys),
-                "not_allowed",
-            )
-            .when(
-                F.col("content_length") > cfg.effective_max_content_length,
-                "too_large",
-            )
-            .otherwise("ok"),
-        )
-        # salt = raw 64-bit hash (unbounded cardinality, no modulus ceiling);
-        # partition count AQE-managed unless explicitly overridden — see
-        # fetch_partition_count. In http mode the units were already salted
-        # BEFORE the socket fetch; don't shuffle the fetched bodies again.
-        if cfg.fetch_mode != "http":
-            n_parts = self.fetch_partition_count()
-            salt = F.xxhash64("host", "url_norm")
-            fetched = (
-                fetched.repartition(n_parts, salt)
-                if n_parts > 0
-                else fetched.repartition(salt)
-            )
-        # when() on the UDF INPUT: Spark doesn't short-circuit Python UDFs,
-        # so gating the body column (not the udf call) is what actually
-        # skips the parse for non-ok rows (same fix as the wave stage)
-        fetched = fetched.withColumn(
-            "spans",
-            parse_spans_udf(F.when(F.col("outcome") == "ok", F.col("body"))),
-        ).withColumn("partition_id", F.spark_partition_id())
-        cookie_cols = ["set_cookie"] if "set_cookie" in fetched.columns else []
-        self.store.write(
-            fetched.select(
-                "url_norm",
-                "linked_from",
-                "url",
-                "unit_priority",
-                "host",
-                "path",
-                "outcome",
-                F.col("page_status").cast("int").alias("page_status"),
-                "base_scheme",
-                "base_host",
-                "spans",
-                "partition_id",
-                *cookie_cols,
-            ),
-            "fetchpage",
-            wave,
-        )
-
     # ------------------------------------------------------------------
     # link-authority ranking (the PageRank -> frontier-priority closed loop)
     RANK_ITERS = 3
@@ -1210,6 +1123,98 @@ class CrawlEngine:
         else:
             yield
 
+    def _fetch_parse(self, combined: DataFrame, pages_slim: DataFrame) -> DataFrame:
+        """The wave's fetch+parse stage, edge grain: fetch (A1/H4: pages
+        equi-join, or the socket fetch in http mode) + gates (C1/C2) +
+        span parse (D1) over the wave's flagged edges. Returns ``combined``
+        plus the fetch columns, ``outcome``, ``spans`` and ``partition_id``,
+        populated only on each unit's rank-1 eligible row (null elsewhere).
+        """
+        cfg, wx = self.config, self._wave_exprs()
+        if cfg.fetch_mode == "http":
+            from brink_spark.operators.http_fetch import http_fetch_columns
+
+            # salt BEFORE the socket fetch so connections see mostly-
+            # same-host batches (operators/http_fetch.py)
+            combined = combined.withColumn("_do_fetch", wx.fetchable)
+            n_parts = self.fetch_partition_count()
+            salt = F.xxhash64("host", "url_norm")
+            combined = (
+                combined.repartition(n_parts, salt)
+                if n_parts > 0
+                else combined.repartition(salt)
+            )
+            joined = http_fetch_columns(
+                combined,
+                self.request_headers(),
+                cfg.http_timeout,
+                guard_col="_do_fetch",
+                pool_size=cfg.http_pool_size,
+            ).drop("_do_fetch")
+        else:
+            # conditional equi-join key: non-fetch rows get a key no
+            # normalized URL can collide with (\x00 prefix) instead of
+            # NULL — nulls would pile every cached/deferred edge of the
+            # wave into one join partition (skew); the prefixed key keeps
+            # the shuffle uniform while never matching a page.
+            # pages_slim arrives fetch-join-ready (_prepare_pages)
+            joined = (
+                combined.withColumn("_fk", wx.fk_expr)
+                .join(pages_slim, "_fk", "left")
+                .drop("_fk")
+            )
+            # NO re-salt here: the equi-join already hash-distributes the
+            # wave by _fk (≈url_norm), so a mega-host's pages spread
+            # uniformly and the parse runs in the join's own reduce stage
+            # at AQE-chosen width — a second repartition would shuffle the
+            # full body column again purely to reach an equivalent
+            # distribution (in http mode the salt is load-bearing: it
+            # groups same-host rows for connection reuse BEFORE the
+            # socket fetch; here the "fetch" IS the join). An explicit
+            # partition override still forces it (a cluster-sizing hint
+            # must beat AQE).
+            n_parts = self.fetch_partition_count()
+            if n_parts > 0:
+                joined = joined.repartition(
+                    n_parts, F.xxhash64("host", "url_norm")
+                )
+        joined = joined.withColumn("outcome", wx.outcome_expr)
+        if cfg.refetch_skip_unchanged:
+            # HTTP-304-style fast path: an EXPIRED url refetched with an
+            # unchanged body hash becomes outcome 'not_modified' BEFORE
+            # the spans column, so the parse UDF (the expensive stage)
+            # never sees it. Its links were already traversed when first
+            # seen, so skipping traversal loses nothing; the seen set is
+            # re-armed by the wave's visited write.
+            joined = joined.withColumn(
+                "content_hash",
+                F.when(F.col("outcome") == "ok", F.xxhash64("body")),
+            )
+            if self._prior_hashes is not None:
+                joined = (
+                    joined.join(
+                        F.broadcast(self._prior_hashes), "url_norm", "left"
+                    )
+                    .withColumn(
+                        "outcome",
+                        F.when(
+                            (F.col("outcome") == "ok")
+                            & (F.col("prior_hash") == F.col("content_hash")),
+                            "not_modified",
+                        ).otherwise(F.col("outcome")),
+                    )
+                    .drop("prior_hash")
+                )
+        # null the UDF's INPUT, not its output: Spark does not short-circuit
+        # Python UDFs inside when() — `when(cond, udf(body))` still ships
+        # every body to Python and discards the result for false rows
+        # (too_large, not_allowed, and the not_modified fast path would all
+        # pay the full parse). With the when() on the body column the
+        # filter runs natively and Python sees null for skipped rows.
+        return joined.withColumn("spans", wx.spans_expr).withColumn(
+            "partition_id", wx.pid_expr
+        )
+
     # ------------------------------------------------------------------
     def _run_wave(
         self,
@@ -1237,18 +1242,18 @@ class CrawlEngine:
         The ``wavestage`` scratch table (edge grain): normalize ->
         seen-split (Bloom prefilter + exact joins) -> per-unit edge
         ranking -> robots gate -> politeness eligibility joined back onto
-        every edge, THEN the fetch columns ride the same write — pages
-        equi-join (or socket fetch) + gates + host-salted span parse,
-        populated only on each unit's rank-1 eligible row. Every output
+        every edge, THEN the fetch columns ride the same write
+        (``_fetch_parse``: pages equi-join or socket fetch + gates + span
+        parse, populated only on each unit's rank-1 eligible row). Every output
         table (fetchlog/visited/bloom/results/frontier) is a flat
         filter/projection of this one scratch parquet table.
 
         Materializing the deep DAG exactly once keeps the driver out of
         the picture: without this, each action re-analyzes the full
         lineage (Catalyst planning is serial driver time) and the wave's
-        wall clock is dominated by plan depth rather than data. r2 used
-        TWO materializations (edges, then fetchpage); fusing them saves a
-        full plan+submit+write+read cycle per wave — the fixed cost that
+        wall clock is dominated by plan depth rather than data. Fusing
+        the fetch into the same materialization saves a second full
+        plan+submit+write+read cycle per wave — the fixed cost that
         dominated the wave wall at bench scale. This is also the
         Iceberg-native shape: the scratch stage is an ordinary table.
 
@@ -1313,6 +1318,11 @@ class CrawlEngine:
         # shuffle per wave instead of one per branch (the plan referenced
         # the windowed fresh edges from four subtrees, two of which could
         # not share an exchange because WindowGroupLimit specialized them).
+        # Condition: live visited holds at most one row per url_norm, else
+        # mark_seen's visited join would duplicate a key's cached edges.
+        # Asserted by tests/test_e2e_crawl.py::
+        # test_live_visited_has_one_row_per_url (compaction) and
+        # tests/test_expiry.py::test_refetch_wins_over_tombstone (expiry).
         marked = (
             marked.withColumn("_edge_rank", wx.edge_rank_col)
             .withColumn("unit_priority", wx.unit_priority_col)
@@ -1404,100 +1414,16 @@ class CrawlEngine:
             *wx.fresh_flagged_cols
         )
         cached_flagged = cached.select(*wx.cached_flagged_cols)
-        _fresh1 = wx.fresh1
-        _fetchable = wx.fetchable
         combined = fresh_flagged.unionByName(cached_flagged)
 
         # --- fused fetch (A1/H4) + gates (C1/C2) + parse (D1), edge grain --
         # One materialization per wave: the fetch/parse columns ride the
-        # SAME write as the edge flags (r2 wrote 'edges' then 'fetchpage' —
-        # two plan+submit+write+read cycles whose fixed cost dominated the
-        # wave wall at bench scale). Fetch columns populate only on the
-        # rank-1 eligible row of each unit; every output table below is a
-        # flat filter/projection of this one scratch table.
-        if cfg.fetch_mode == "http":
-            from brink_spark.operators.http_fetch import http_fetch_columns
-
-            # salt BEFORE the socket fetch so connections see mostly-
-            # same-host batches (operators/http_fetch.py)
-            combined = combined.withColumn("_do_fetch", _fetchable)
-            n_parts = self.fetch_partition_count()
-            salt = F.xxhash64("host", "url_norm")
-            combined = (
-                combined.repartition(n_parts, salt)
-                if n_parts > 0
-                else combined.repartition(salt)
-            )
-            joined = http_fetch_columns(
-                combined,
-                self.request_headers(),
-                cfg.http_timeout,
-                guard_col="_do_fetch",
-                pool_size=cfg.http_pool_size,
-            ).drop("_do_fetch")
-        else:
-            # conditional equi-join key: non-fetch rows get a key no
-            # normalized URL can collide with (\x00 prefix) instead of
-            # NULL — nulls would pile every cached/deferred edge of the
-            # wave into one join partition (skew); the prefixed key keeps
-            # the shuffle uniform while never matching a page.
-            # pages_slim arrives fetch-join-ready (_prepare_pages)
-            joined = (
-                combined.withColumn("_fk", wx.fk_expr)
-                .join(pages_slim, "_fk", "left")
-                .drop("_fk")
-            )
-            # NO re-salt here: the equi-join already hash-distributes the
-            # wave by _fk (≈url_norm), so a mega-host's pages spread
-            # uniformly and the parse runs in the join's own reduce stage
-            # at AQE-chosen width — a second repartition would shuffle the
-            # full body column again purely to reach an equivalent
-            # distribution (in http mode the salt is load-bearing: it
-            # groups same-host rows for connection reuse BEFORE the
-            # socket fetch; here the "fetch" IS the join). An explicit
-            # partition override still forces it (a cluster-sizing hint
-            # must beat AQE).
-            n_parts = self.fetch_partition_count()
-            if n_parts > 0:
-                joined = joined.repartition(
-                    n_parts, F.xxhash64("host", "url_norm")
-                )
-        joined = joined.withColumn("outcome", wx.outcome_expr)
-        if cfg.refetch_skip_unchanged:
-            # HTTP-304-style fast path: an EXPIRED url refetched with an
-            # unchanged body hash becomes outcome 'not_modified' BEFORE
-            # the spans column, so the parse UDF (the expensive stage)
-            # never sees it. Its links were already traversed when first
-            # seen, so skipping traversal loses nothing; the seen set is
-            # re-armed by the visited write below.
-            joined = joined.withColumn(
-                "content_hash",
-                F.when(F.col("outcome") == "ok", F.xxhash64("body")),
-            )
-            if self._prior_hashes is not None:
-                joined = (
-                    joined.join(
-                        F.broadcast(self._prior_hashes), "url_norm", "left"
-                    )
-                    .withColumn(
-                        "outcome",
-                        F.when(
-                            (F.col("outcome") == "ok")
-                            & (F.col("prior_hash") == F.col("content_hash")),
-                            "not_modified",
-                        ).otherwise(F.col("outcome")),
-                    )
-                    .drop("prior_hash")
-                )
-        # null the UDF's INPUT, not its output: Spark does not short-circuit
-        # Python UDFs inside when() — `when(cond, udf(body))` still ships
-        # every body to Python and discards the result for false rows
-        # (too_large, not_allowed, and the not_modified fast path would all
-        # pay the full parse). With the when() on the body column the
-        # filter runs natively and Python sees null for skipped rows.
-        joined = joined.withColumn("spans", wx.spans_expr).withColumn(
-            "partition_id", wx.pid_expr
-        )
+        # SAME wavestage write as the edge flags. A separate fetch table
+        # would cost a second plan+submit+write+read cycle per wave, the
+        # fixed cost that dominated the wave wall at bench scale. Every
+        # output table below is a flat filter/projection of this one
+        # scratch table.
+        joined = self._fetch_parse(combined, pages_slim)
         cookie_cols = ["set_cookie"] if "set_cookie" in joined.columns else []
         hash_cols = ["content_hash"] if cfg.refetch_skip_unchanged else []
         obs_stage = Observation(f"w{wave}_stage")
@@ -1507,7 +1433,7 @@ class CrawlEngine:
         with self._phase("stage-fused"):
             store.write(stage_out, "wavestage", wave)
         edges = store.read(spark, "wavestage", wave)
-        fetchpage = edges.filter(wx.outcome_notnull)
+        fetched = edges.filter(wx.outcome_notnull)
         ec = obs_stage.get
         m["n_cached"] = ec["n_cached"]
         m["n_units"] = ec["n_units"]
@@ -1544,7 +1470,7 @@ class CrawlEngine:
         # the guard is on.
         if cfg.max_pages_per_host > 0:
             with self._phase("host-taken"):
-                wave_taken = fetchpage.groupBy("host").agg(
+                wave_taken = fetched.groupBy("host").agg(
                     F.count(F.lit(1)).alias("_taken")
                 )
                 merged = (
@@ -1565,7 +1491,7 @@ class CrawlEngine:
             from brink_spark.functions.templates import url_template
 
             with self._phase("template-taken"):
-                wave_ttaken = fetchpage.groupBy(
+                wave_ttaken = fetched.groupBy(
                     url_template(F.col("url_norm")).alias("template")
                 ).agg(F.count(F.lit(1)).alias("_ttaken"))
                 tmerged = (
@@ -1586,10 +1512,10 @@ class CrawlEngine:
         # max_by(value, url_norm). The reduction runs in Spark (partial agg,
         # one row per distinct cookie name); the collect is bounded by the
         # number of distinct names, never by the number of pages.
-        if "set_cookie" in fetchpage.columns:
+        if "set_cookie" in fetched.columns:
             with self._phase("cookie-reduce"):
                 got = (
-                    fetchpage.filter(
+                    fetched.filter(
                         (F.col("outcome") != "miss") & F.col("set_cookie").isNotNull()
                     )
                     .select(
@@ -1628,13 +1554,13 @@ class CrawlEngine:
             F.lit(-1),
         )
         fetchlog_out = log_cols(
-            fetchpage, F.col("outcome"), F.col("partition_id")
+            fetched, F.col("outcome"), F.col("partition_id")
         ).unionByName(edge_log)
-        ok = fetchpage.filter(wx.outcome_ok)
+        ok = fetched.filter(wx.outcome_ok)
         # dup-edge handler rows take their status from the unit's fetched
         # row; in refetch-skip mode a not_modified fetch also anchors them
         okish = (
-            fetchpage.filter(wx.okish_filter)
+            fetched.filter(wx.okish_filter)
             if cfg.refetch_skip_unchanged
             else ok
         )
@@ -1657,7 +1583,7 @@ class CrawlEngine:
             # HTTP-304 handler shape: the callback is told the url was
             # re-checked (real fetch, current status) but gets no body —
             # exactly the cached-row contract, distinct row_kind
-            results_notmod = fetchpage.filter(
+            results_notmod = fetched.filter(
                 F.col("outcome") == "not_modified"
             ).select(
                 F.lit(wave).alias("wave"),
@@ -1695,7 +1621,7 @@ class CrawlEngine:
             # The url is not in visited (only ok fetches are), so the
             # re-enqueued edges flow as ordinary fresh edges next wave.
             # The retry set is wave-miss-sized — it rides a broadcast.
-            wave_miss = fetchpage.filter(F.col("outcome") == "miss").select(
+            wave_miss = fetched.filter(F.col("outcome") == "miss").select(
                 "url_norm"
             )
             wave_mn = wave_miss.groupBy("url_norm").agg(
@@ -1751,7 +1677,7 @@ class CrawlEngine:
                 if cfg.refetch_skip_unchanged:
                     # not_modified rows re-arm the seen set too, and the
                     # content hash rides along for the NEXT expiry cycle
-                    vrows = fetchpage.filter(
+                    vrows = fetched.filter(
                         F.col("outcome").isin("ok", "not_modified")
                     ).select(
                         "url_norm",
@@ -1789,7 +1715,7 @@ class CrawlEngine:
         def _r_lineage():
             if cfg.collect_metrics:  # per-partition lineage diagnostic (A5)
                 with self._phase("lineage-readback"):
-                    for r in fetchpage.groupBy("partition_id").count().collect():
+                    for r in fetched.groupBy("partition_id").count().collect():
                         lineage[r["partition_id"]] = r["count"]
 
         # all five writes run concurrently on one pool; the gating pair

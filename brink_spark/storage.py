@@ -51,8 +51,8 @@ class Manifest:
 
 
 class CrawlStore:
-    # wavestage/fetchpage are the per-wave materialized stage tables (scratch):
-    # deep DAGs are evaluated exactly once into them and every output table
+    # wavestage is the per-wave materialized stage table (scratch): the
+    # deep DAG is evaluated exactly once into it and every output table
     # is a flat projection — keeps Catalyst planning out of the wave's
     # critical path and doubles as wave-level debuggability
     TABLES = (
@@ -62,7 +62,6 @@ class CrawlStore:
         "metrics",
         "bloom",
         "fetchlog",
-        "fetchpage",  # written by the standalone fetch_stage harness path
         "wavestage",  # the fused per-wave scratch (edge grain + fetch cols)
         "ranks",
     )
@@ -214,7 +213,7 @@ class CrawlStore:
         return self._apply_tombstones(spark, spark.read.parquet(*paths))
 
     # tables whose per-wave dirs form an append log, so 'state as of wave K'
-    # = union of dirs 0..K. frontier / wavestage / fetchpage / bloom are
+    # = union of dirs 0..K. frontier / wavestage / bloom are
     # SNAPSHOT-per-wave tables (each wave's dir supersedes the previous) —
     # unioning those would mix superseded states.
     APPEND_TABLES = ("visited", "results", "fetchlog", "metrics")

@@ -78,3 +78,48 @@ def test_robots_denied_never_fetched(spark, tiny_run, tiny_oracle):
     assert not (denied & set(tiny_oracle.visited))
     # a denied URL may be re-discovered and denied again, but never fetched
     assert not (denied & fetched)
+
+
+def test_live_visited_has_one_row_per_url(spark, tiny_run):
+    """The wave's (url_norm, _is_fresh) ranking window assumes live visited
+    holds at most one row per url_norm; the shared run compacts after its
+    last wave, so this checks the compacted rollup as the next wave reads it."""
+    engine, _ = tiny_run
+    man = engine.store.read_manifest()
+    assert man.compacted_upto == man.last_wave
+    live = engine.store.read_visited(spark, man)
+    assert live.count() == live.select("url_norm").distinct().count()
+
+
+def test_fetch_partition_override_matches_oracle(spark, tiny_fixture, tmp_path):
+    """fetch_partitions > 0 forces the salted repartition before the parse:
+    the four contracts still hold and the fetches land in exactly the
+    configured partitions (without the override AQE coalesces this tiny
+    wave's join to one partition)."""
+    from brink_spark.oracle import crawl_oracle
+    from brink_spark.plans.crawl import CrawlEngine
+
+    cfg = tiny_fixture.config.with_(
+        max_content_length=100_000, fetch_partitions=3, max_waves=4
+    )
+    engine = CrawlEngine(spark, cfg, str(tmp_path / "store"))
+    summary = engine.run(fixture=tiny_fixture)
+    cmp = compare_engine_oracle(spark, engine, crawl_oracle(tiny_fixture, cfg))
+    assert cmp.all_match, cmp.detail
+
+    flog = spark.read.parquet(
+        *[
+            engine.store.wave_dir("fetchlog", w)
+            for w in range(len(summary.wave_metrics))
+        ]
+    )
+    pids = {
+        r["partition_id"]
+        for r in flog.filter(
+            F.col("outcome").isin("ok", "miss", "not_allowed", "too_large")
+        )
+        .select("partition_id")
+        .distinct()
+        .collect()
+    }
+    assert pids == {0, 1, 2}, pids

@@ -4,7 +4,8 @@ BASELINE.json's north_rule requires ≥0.8 fetch-throughput scaling efficiency
 from N to 4N executors; the sandbox has no cluster, so (per BASELINE.md's
 protocol) we run the identical job at local[N] and local[4N] on identical
 input and report throughput at both plus
-``efficiency = throughput(local[4N]) / (4 × throughput(local[N]))``.
+``efficiency = throughput(local[hi]) / ((hi / lo) × throughput(local[lo]))``
+(hi/lo = 4 for the N→4N pair).
 Results + level-pair rationale (single-box memory wall): BENCH/BASELINE.md.
 
 The measured job is one steady-state crawl wave over the synthetic web
@@ -13,11 +14,13 @@ hot-host skew, seeded politeness budgets): the frontier against a 25%-prefilled 
 Bloom probe → anti-join → politeness → fetch-join → parse → visited/bloom/
 results/frontier commits. Setup (fixture generation, store template) is
 excluded from timing; each level copies the same template and runs the
-same wave in a fresh JVM.
+same wave in a fresh JVM. Levels alternate (lo, hi, lo, hi, ...) so a
+noisy-neighbour burst hits both alike; each level reports its best run.
 
 Usage:
-  python tools/bench_scaling.py            # prepare + both levels + report
-  python tools/bench_scaling.py run 8      # one level (internal)
+  python tools/bench_scaling.py              # prepare + both levels + report
+  python tools/bench_scaling.py report-only  # both levels on the existing template
+  python tools/bench_scaling.py run 8        # one level (internal)
 """
 
 from __future__ import annotations
@@ -108,25 +111,6 @@ def prepare() -> None:
     store.commit(Manifest(last_wave=0, total_visited=n_visited))
     print(f"# template: frontier={n_frontier} visited={n_visited}", file=sys.stderr)
 
-    # materialize the wave-1 edges table for the fetch-stage-only harness
-    # (run_fetch_level times fetch_stage alone over TEMPLATE/edges_stage)
-    from brink_spark.config import CrawlConfig
-    from brink_spark.plans.crawl import CrawlEngine
-
-    edge_store = f"{WORK}/store_edges_prep"
-    shutil.rmtree(edge_store, ignore_errors=True)
-    shutil.copytree(TEMPLATE, edge_store)
-    eng = CrawlEngine(
-        spark, fx.config.with_(collect_metrics=False), edge_store,
-        pages=pages_r, robots=spark.read.parquet(ROBOTS),
-    )
-    eng.run(resume=True, max_waves=2)
-    # the fused wavestage is a superset of the old edges table (same rows,
-    # plus fetch columns) — a valid fetch_stage input as-is
-    shutil.copytree(f"{edge_store}/wavestage/wave=1", f"{TEMPLATE}/edges_stage")
-    n_edges = spark.read.parquet(f"{TEMPLATE}/edges_stage").count()
-    shutil.rmtree(edge_store, ignore_errors=True)
-    print(f"# edges_stage: {n_edges} edges", file=sys.stderr)
     spark.stop()
 
 
@@ -261,77 +245,9 @@ def run_level(cpus: int) -> dict:
     return out
 
 
-def run_fetch_level(cpus: int) -> dict:
-    """Time ONLY the fetch/parse stage (the north-rule metric is
-    *fetch*-throughput scaling) over a prepared edges table — the
-    embarrassingly-parallel part of the wave, free of the loop's
-    commit/barrier orchestration."""
-    from brink_spark.config import CrawlConfig
-    from brink_spark.plans.crawl import CrawlEngine
-    from brink_spark.session import get_spark
-    from pyspark.sql import functions as F
-
-    with open(CONFIG) as fh:
-        raw = json.load(fh)
-    for k in (
-        "allowed_domains", "ignore_get_parameters", "forbidden_paths",
-        "headers", "cookies", "session_cookie_names",
-    ):
-        raw[k] = tuple(tuple(x) if isinstance(x, list) else x for x in raw[k])
-    config = CrawlConfig(**raw).with_(collect_metrics=False)
-
-    store_dir = f"{WORK}/fetchstore_{cpus}"
-    shutil.rmtree(store_dir, ignore_errors=True)
-    os.makedirs(store_dir)
-
-    master = (
-        "inherit" if os.environ.get("BRINK_UNDER_SUBMIT") else f"local[{cpus}]"
-    )
-    spark = get_spark(
-        master, app_name=f"fetch_scaling_{cpus}", shuffle_partitions=64,
-        extra={
-            "spark.ui.showConsoleProgress": "false",
-            "spark.local.dir": f"{WORK}/spark-local-f{cpus}",
-        },
-    )
-    engine = CrawlEngine(
-        spark, config, store_dir,
-        pages=spark.read.parquet(PAGES),
-        robots=spark.read.parquet(ROBOTS),
-    )
-    pages_slim = engine.pages.select(
-        "url_norm", F.col("status").alias("page_status"), "content_length", "body"
-    )
-    # wavestage carries the fused fetch columns; fetch_stage re-derives
-    # them, so strip to the pure edge columns first
-    edges = spark.read.parquet(f"{TEMPLATE}/edges_stage").drop(
-        "outcome", "page_status", "spans", "partition_id", "set_cookie"
-    )
-    # warmup: same stage shape on a small slice (worker pool + codegen)
-    engine.fetch_stage(99, edges.limit(2000), pages_slim)
-    t0 = time.time()
-    engine.fetch_stage(1, edges, pages_slim)
-    wall = time.time() - t0
-    flog = spark.read.parquet(f"{store_dir}/fetchpage/wave=1")
-    n = flog.count()
-    n_ok = flog.filter(F.col("outcome") == "ok").count()
-    out = {
-        "cpus": cpus,
-        "wall_sec": round(wall, 2),
-        "fetched": n,
-        "ok": n_ok,
-        "urls_per_sec": round(n / wall, 2),
-    }
-    spark.stop()
-    return out
-
-
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "run":
         print(json.dumps(run_level(int(sys.argv[2]))))
-        return
-    if len(sys.argv) > 1 and sys.argv[1] == "fetch":
-        print(json.dumps(run_fetch_level(int(sys.argv[2]))))
         return
 
     if not (len(sys.argv) > 1 and sys.argv[1] == "report-only"):
@@ -347,8 +263,8 @@ def main() -> None:
     # (the north rule's deploy shape) instead of a plain python subprocess.
     # Same job, same timing protocol — the level's parallelism comes from
     # spark-submit's --master and the session factory inherits it.
-    submit_prefix: list[str] = []
-    if os.environ.get("BRINK_SUBMIT") == "1":
+    submit = os.environ.get("BRINK_SUBMIT") == "1"
+    if submit:
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         import make_pyfiles
 
@@ -357,34 +273,33 @@ def main() -> None:
         if submit_cmd is None:
             raise SystemExit("BRINK_SUBMIT=1 but no spark-submit on PATH")
         print(f"# levels run via spark-submit --py-files {zip_path}", file=sys.stderr)
-    results = {}
-    for cpus in LEVELS:
-        if os.environ.get("BRINK_SUBMIT") == "1":
-            submit_prefix = [
-                submit_cmd,
-                "--master",
-                f"local[{cpus}]",
-                # builder-set driver memory is ignored once spark-submit
-                # has launched the JVM (1g default) — pass it here so the
-                # submit path runs with the same heap as the in-process one
-                "--driver-memory",
-                os.environ.get("SPARK_DRIVER_MEM", "8g"),
-                "--py-files",
-                zip_path,
-            ]
-        if submit_prefix:
-            cmd = submit_prefix + [os.path.abspath(__file__), "run", str(cpus)]
-        else:
-            cmd = [sys.executable, os.path.abspath(__file__), "run", str(cpus)]
-        best = None
-        for attempt in range(REPEATS):
-            env = dict(os.environ)
-            if submit_prefix:
-                env["BRINK_UNDER_SUBMIT"] = "1"
+    script = os.path.abspath(__file__)
+    env = dict(os.environ)
+    if submit:
+        env["BRINK_UNDER_SUBMIT"] = "1"
+    results: dict[int, dict] = {}
+    for attempt in range(REPEATS):
+        for cpus in LEVELS:
+            if submit:
+                cmd = [
+                    submit_cmd,
+                    "--master",
+                    f"local[{cpus}]",
+                    # driver memory set in the session config is ignored once spark-submit
+                    # has launched the JVM (1g default) — pass it here so the
+                    # submit path runs with the same heap as the in-process one
+                    "--driver-memory",
+                    os.environ.get("SPARK_DRIVER_MEM", "8g"),
+                    "--py-files",
+                    zip_path,
+                    script, "run", str(cpus),
+                ]
+            else:
+                cmd = [sys.executable, script, "run", str(cpus)]
             proc = subprocess.run(
                 cmd,
                 capture_output=True, text=True, env=env,
-                cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                cwd=os.path.dirname(os.path.dirname(script)),
             )
             line = [l for l in proc.stdout.splitlines() if l.startswith("{")]
             if not line:
@@ -392,15 +307,13 @@ def main() -> None:
                 raise SystemExit(f"level {cpus} failed")
             r = json.loads(line[-1])
             print(f"# local[{cpus}] attempt {attempt}: wall={r['wall_sec']}", file=sys.stderr)
-            if best is None or r["wall_sec"] < best["wall_sec"]:
-                best = r
-        results[cpus] = best
-        print(f"# local[{cpus}] best: {best}", file=sys.stderr)
+            if cpus not in results or r["wall_sec"] < results[cpus]["wall_sec"]:
+                results[cpus] = r
+    for cpus in LEVELS:
+        print(f"# local[{cpus}] best: {results[cpus]}", file=sys.stderr)
 
     lo, hi = LEVELS
-    eff = results[hi]["urls_per_sec"] / (
-        (hi // lo) * results[lo]["urls_per_sec"]
-    )
+    eff = results[hi]["urls_per_sec"] / ((hi / lo) * results[lo]["urls_per_sec"])
     report = {
         "workload": f"one steady-state crawl wave, {SCALE} fixture, hot-host skew",
         "levels": results,
