@@ -79,12 +79,31 @@ def _with_depth(frontier: DataFrame) -> DataFrame:
     """Back-compat: frontier tables written before the depth column
     existed (old stores resumed with a new engine) read as depth 0."""
     if "depth" in frontier.columns:
-        # streaming batches read with the full schema can carry nulls for
-        # files written before the column existed
+        # depth is nullable in FRONTIER_SCHEMA; a null reads as the seed
+        # depth
         return frontier.withColumn(
             "depth", F.coalesce("depth", F.lit(0)).cast("int")
         )
     return frontier.withColumn("depth", F.lit(0))
+
+
+# the fetchlog outcomes that were real requests; its other rows
+# (robots_denied, deferred, host_capped, template_capped) never fetched
+ATTEMPT_OUTCOMES = ("miss", "not_allowed", "too_large", "ok", "not_modified")
+
+
+def _fold_counts(
+    prev: DataFrame | None, rows: DataFrame, key: str, name: str
+) -> DataFrame:
+    """Cumulative ``(key, name)`` count table: ``rows`` counted per ``key``
+    and sum-merged into ``prev``. One tiny agg job; the eager
+    localCheckpoint keeps the table from re-deriving earlier waves and lets
+    the next wave broadcast a concrete relation."""
+    counts = rows.groupBy(key).agg(F.count(F.lit(1)).alias(name))
+    if prev is not None:
+        counts = prev.unionByName(counts).groupBy(key).agg(F.sum(name).alias(name))
+    return counts.localCheckpoint(eager=True)
+
 
 @dataclass
 class CrawlSummary:
@@ -145,10 +164,10 @@ class CrawlEngine:
         # copy, so each frontier row is normalized once. Results are
         # unchanged: the function is pure; the marker only constrains the
         # optimizer. The marker is engine-wide, not wave-local: redirect
-        # collapse, sitemap discovery, rank reprioritization and the
-        # streaming loop share this UDF, so filter pushdown below it is off
-        # in all of them, and none may use it directly in a join condition
-        # (analysis rejects nondeterministic expressions there).
+        # collapse, sitemap discovery and rank reprioritization share this
+        # UDF, so filter pushdown below it is off in all of them, and none
+        # may use it directly in a join condition (analysis rejects
+        # nondeterministic expressions there).
         self.norm_udf = make_normalize_udf(
             config.ignore_get_parameters, config.fuzzy_get_parameter_checks
         ).asNondeterministic()
@@ -167,8 +186,8 @@ class CrawlEngine:
         self._budgets = budget_per_host(robots, config.politeness_budget)
         # cumulative (host, _taken) fetch-attempt counts — the
         # max_pages_per_host trap-guard state. None until the first wave
-        # fetches (or rebuilt from committed fetchlog on resume); stays
-        # None forever when the guard is off.
+        # fetches; every run() rebuilds it from committed fetchlog
+        # (_rebuild_attempts); stays None forever when the guard is off.
         self._host_taken: DataFrame | None = None
         # cumulative (template, _ttaken) fetch-attempt counts — the
         # max_pages_per_template trap-guard state (functions/templates.py
@@ -177,8 +196,8 @@ class CrawlEngine:
         # side holds just the actual traps, never every template.
         self._template_taken: DataFrame | None = None
         # cumulative (url_norm, _mn) transport-miss counts — retry_misses
-        # state (same lifecycle as _host_taken; rebuilt from fetchlog on
-        # resume; stays None while the feature is off)
+        # state (same lifecycle as _host_taken; stays None while the
+        # feature is off)
         self._miss_counts: DataFrame | None = None
         # refetch_skip_unchanged comparison set: (url_norm, prior_hash) of
         # expired entries, computed once per run() (expiry only happens
@@ -187,15 +206,23 @@ class CrawlEngine:
         # shared cookie jar (reference brink.go:267-274): response cookies
         # merge in by name, overwriting. Wave-discretized semantics: cookies
         # set by pages fetched in wave K apply to requests from wave K+1 on.
-        self.cookie_jar: dict[str, str] = dict(config.cookies)
+        self.cookie_jar: dict[str, str] = {}
         self.auth_suppressed_since_wave: int | None = None
-        self._check_auth_suppression(wave=0)
+        self._reset_request_state()
         # post-durability hook: called with the wave's metrics dict AFTER
         # the wave's deferred writes AND manifest commit land on disk —
         # the point where a logged wave can no longer disagree with the
         # store on resume (the CLI's per-wave JSONL line hangs off this)
         self.on_wave_committed = None
         self._stop_requested = False  # set by request_stop()
+
+    def _reset_request_state(self) -> None:
+        """The request state a fresh crawl starts from: the config's jar,
+        Authorization suppressed from wave 0 only if a config cookie is a
+        session cookie."""
+        self.cookie_jar = dict(self.config.cookies)
+        self.auth_suppressed_since_wave = None
+        self._check_auth_suppression(wave=0)
 
     def _check_auth_suppression(self, wave: int) -> None:
         """brink.go:177-184: once the jar holds a cookie whose name matches a
@@ -401,8 +428,8 @@ class CrawlEngine:
     def _prepare_pages(self) -> DataFrame | None:
         """The fetch-join-ready pages side every wave joins against: the
         payload columns keyed by ``_fk``, 3xx chains collapsed, prepared once
-        per run (batch run() and StreamingCrawl alike). ``None`` in http
-        mode, where the wave fetches over real sockets."""
+        per run. ``None`` in http mode, where the wave fetches over real
+        sockets."""
         if self.config.fetch_mode == "http":
             return None
         if self.pages is None:
@@ -432,6 +459,56 @@ class CrawlEngine:
         # driver) and let AQE pick the per-wave strategy (broadcast at
         # small sizes).
         return pages_slim.localCheckpoint(eager=True)
+
+    def _fold_attempts(self, attempts: DataFrame) -> None:
+        """Fold fetch attempts (one row per request, carrying ``host``,
+        ``url_norm`` and ``outcome``) into the lifetime counts each enabled
+        feature reads: per host (max_pages_per_host), per URL template
+        (max_pages_per_template, keyed by the native template expression —
+        the table grows with DISTINCT templates, not URLs) and per-url
+        transport misses (retry_misses)."""
+        cfg = self.config
+        if cfg.max_pages_per_host > 0:
+            with self._phase("host-taken"):
+                self._host_taken = _fold_counts(
+                    self._host_taken, attempts, "host", "_taken"
+                )
+        if cfg.max_pages_per_template > 0:
+            from brink_spark.functions.templates import url_template
+
+            with self._phase("template-taken"):
+                self._template_taken = _fold_counts(
+                    self._template_taken,
+                    attempts.select(
+                        url_template(F.col("url_norm")).alias("template")
+                    ),
+                    "template",
+                    "_ttaken",
+                )
+        if cfg.retry_misses > 0:
+            self._miss_counts = _fold_counts(
+                self._miss_counts,
+                attempts.filter(F.col("outcome") == "miss"),
+                "url_norm",
+                "_mn",
+            )
+
+    def _rebuild_attempts(self, last_wave: int) -> None:
+        """Set the lifetime counts to the fold of every COMMITTED fetchlog
+        attempt through ``last_wave``. Overwrites in-memory state from a
+        crashed in-process run or an earlier run of this engine; with no
+        committed wave (a fresh run) every count is None."""
+        self._host_taken = self._template_taken = self._miss_counts = None
+        cfg = self.config
+        counted = max(
+            cfg.max_pages_per_host, cfg.max_pages_per_template, cfg.retry_misses
+        )
+        if last_wave >= 0 and counted > 0:
+            self._fold_attempts(
+                self.store.read_asof(self.spark, "fetchlog", last_wave).filter(
+                    F.col("outcome").isin(*ATTEMPT_OUTCOMES)
+                )
+            )
 
     def run(
         self,
@@ -463,7 +540,6 @@ class CrawlEngine:
         manifest = self.store.read_manifest() if resume else None
         if manifest is None:
             self.store.reset()
-            self._host_taken = None  # engine reuse: fresh run, fresh counts
             if seeds is None:
                 raise ValueError("fresh run requires seeds")
             # sitemap bootstrap: each entry host's robots.txt `Sitemap:`
@@ -503,6 +579,8 @@ class CrawlEngine:
                     )
                 )
             self.seed_frontier(seeds)
+            # an earlier run of this engine may have grown the jar
+            self._reset_request_state()
             manifest = Manifest()
             wave = 0
         else:
@@ -511,66 +589,6 @@ class CrawlEngine:
             # any carried frontier count may describe a wave the crash threw
             # away — recount once from parquet instead
             self._pending_frontier_count = None
-            # rebuild the host-cap attempt counts from COMMITTED fetchlog
-            # waves (attempts = the four fetch outcomes; robots_denied /
-            # deferred / host_capped rows were never requests). Overwrites
-            # any in-memory state from a crashed in-process run.
-            if self.config.max_pages_per_host > 0:
-                if manifest.last_wave >= 0:
-                    self._host_taken = (
-                        self.store.read_asof(
-                            self.spark, "fetchlog", manifest.last_wave
-                        )
-                        .filter(
-                            F.col("outcome").isin(
-                                "miss", "not_allowed", "too_large", "ok",
-                                "not_modified",
-                            )
-                        )
-                        .groupBy("host")
-                        .agg(F.count(F.lit(1)).alias("_taken"))
-                        .localCheckpoint(eager=True)
-                    )
-                else:
-                    self._host_taken = None
-            # rebuild the per-template attempt counts the same way (the
-            # template recomputes natively from the committed url_norm)
-            if self.config.max_pages_per_template > 0:
-                if manifest.last_wave >= 0:
-                    from brink_spark.functions.templates import url_template
-
-                    self._template_taken = (
-                        self.store.read_asof(
-                            self.spark, "fetchlog", manifest.last_wave
-                        )
-                        .filter(
-                            F.col("outcome").isin(
-                                "miss", "not_allowed", "too_large", "ok",
-                                "not_modified",
-                            )
-                        )
-                        .groupBy(
-                            url_template(F.col("url_norm")).alias("template")
-                        )
-                        .agg(F.count(F.lit(1)).alias("_ttaken"))
-                        .localCheckpoint(eager=True)
-                    )
-                else:
-                    self._template_taken = None
-            # rebuild the per-url transport-miss counts (retry_misses)
-            if self.config.retry_misses > 0:
-                if manifest.last_wave >= 0:
-                    self._miss_counts = (
-                        self.store.read_asof(
-                            self.spark, "fetchlog", manifest.last_wave
-                        )
-                        .filter(F.col("outcome") == "miss")
-                        .groupBy("url_norm")
-                        .agg(F.count(F.lit(1)).alias("_mn"))
-                        .localCheckpoint(eager=True)
-                    )
-                else:
-                    self._miss_counts = None
             # restore the runtime request state committed with the last wave
             # (cookies from committed waves survive a crash; the suppressed
             # Authorization header stays suppressed). Pre-jar manifests
@@ -595,6 +613,10 @@ class CrawlEngine:
                     ).select("linked_from", "url", "priority", "depth")
                     extra = existing.unionByName(extra)
                 self.store.rewrite(extra, "frontier", wave)
+
+        # the trap-guard and retry counts come from the store, never from an
+        # earlier run of this engine
+        self._rebuild_attempts(manifest.last_wave)
 
         # preblocked templates (the streaming monitor's feedback path,
         # streaming/template_monitor.py): enter the run already saturated
@@ -678,7 +700,7 @@ class CrawlEngine:
                     break
                 if K > 0 and wave > 0 and wave % K == 0:
                     _join_pending()  # rank boundary reads deferred results
-                out = self._run_wave(wave, manifest, pages_slim, defer=True)
+                out = self._run_wave(wave, manifest, pages_slim)
                 _join_pending()
                 if out is None:  # empty frontier → graceful stop (F2)
                     break
@@ -1221,23 +1243,20 @@ class CrawlEngine:
         wave: int,
         manifest: Manifest,
         pages_slim: DataFrame,
-        defer: bool = False,
     ):
         """One wave as ONE materialized stage + shallow projections.
 
-        ``defer=True`` (the run() loop's mode) returns ``(metrics,
-        finish)`` after only the GATING writes — frontier(wave+1) and
-        visited+bloom, the tables the next wave's stage reads — have
-        committed; ``finish()`` blocks on the remaining writes (fetchlog,
-        results, lineage) and writes the metrics row. run() starts wave
-        N+1's stage while finish(N) drains, overlapping the next wave's
-        big materialization with this wave's auxiliary flushes (the spans
+        Returns ``None`` on an empty frontier, else ``(metrics, finish)``
+        after only the GATING writes — frontier(wave+1) and visited+bloom,
+        the tables the next wave's stage reads — have committed;
+        ``finish()`` blocks on the remaining writes (fetchlog, results,
+        lineage) and writes the metrics row. run() starts wave N+1's stage
+        while finish(N) drains, overlapping the next wave's big
+        materialization with this wave's auxiliary flushes (the spans
         payload in results is the widest write of the wave). Crash
         semantics are unchanged: the manifest commits only after
         finish(), so an interrupted overlap leaves wave N (and any N+1
         partials) uncommitted and clean_uncommitted recomputes them.
-        ``defer=False`` preserves the fully synchronous contract for
-        direct callers (the streaming loop).
 
         The ``wavestage`` scratch table (edge grain): normalize ->
         seen-split (Bloom prefilter + exact joins) -> per-unit edge
@@ -1461,47 +1480,10 @@ class CrawlEngine:
             m["n_not_modified"] = ec["n_not_modified"]
             m["n_fetched"] += ec["n_not_modified"]
 
-        # lifetime per-host attempt counts (max_pages_per_host trap guard):
-        # every outcome-bearing row was a fetch ATTEMPT; fold this wave's
-        # per-host counts into the cumulative table. One tiny agg job over
-        # the already-materialized scratch parquet, localCheckpoint-ed so
-        # the table never re-derives prior waves (and so wave N+1's
-        # politeness join broadcasts a concrete relation). Only paid when
-        # the guard is on.
-        if cfg.max_pages_per_host > 0:
-            with self._phase("host-taken"):
-                wave_taken = fetched.groupBy("host").agg(
-                    F.count(F.lit(1)).alias("_taken")
-                )
-                merged = (
-                    wave_taken
-                    if self._host_taken is None
-                    else self._host_taken.unionByName(wave_taken)
-                    .groupBy("host")
-                    .agg(F.sum("_taken").alias("_taken"))
-                )
-                self._host_taken = merged.localCheckpoint(eager=True)
-
-        # lifetime per-template attempt counts (max_pages_per_template
-        # trap guard): same fold as the host guard, keyed by the native
-        # template expression over the attempted url_norms. The cumulative
-        # table grows with DISTINCT templates (thousands at web scale, not
-        # 10^10 URLs) — the collapse is the whole point of the guard.
-        if cfg.max_pages_per_template > 0:
-            from brink_spark.functions.templates import url_template
-
-            with self._phase("template-taken"):
-                wave_ttaken = fetched.groupBy(
-                    url_template(F.col("url_norm")).alias("template")
-                ).agg(F.count(F.lit(1)).alias("_ttaken"))
-                tmerged = (
-                    wave_ttaken
-                    if self._template_taken is None
-                    else self._template_taken.unionByName(wave_ttaken)
-                    .groupBy("template")
-                    .agg(F.sum("_ttaken").alias("_ttaken"))
-                )
-                self._template_taken = tmerged.localCheckpoint(eager=True)
+        # lifetime attempt counts: every outcome-bearing row was a fetch
+        # ATTEMPT. The folds read the already-materialized scratch parquet
+        # and are only paid while a guard is on.
+        self._fold_attempts(fetched)
 
         # response-cookie accumulation (brink.go:199-204): the reference
         # merges resp.Cookies() BEFORE the domain-allowed and content-length
@@ -1615,26 +1597,15 @@ class CrawlEngine:
         )
         m["n_miss_retry"] = 0
         if cfg.retry_misses > 0:
-            # transport-miss retry: fold this wave's per-url miss counts,
-            # then re-enqueue EVERY discovering edge of each missed unit
-            # whose lifetime miss count is still within the retry budget.
-            # The url is not in visited (only ok fetches are), so the
-            # re-enqueued edges flow as ordinary fresh edges next wave.
-            # The retry set is wave-miss-sized — it rides a broadcast.
+            # transport-miss retry: re-enqueue EVERY discovering edge of
+            # each unit missed this wave whose lifetime miss count (folded
+            # above) is still within the retry budget. The url is not in
+            # visited (only ok fetches are), so the re-enqueued edges flow
+            # as ordinary fresh edges next wave. The retry set is
+            # wave-miss-sized — it rides a broadcast.
             wave_miss = fetched.filter(F.col("outcome") == "miss").select(
                 "url_norm"
             )
-            wave_mn = wave_miss.groupBy("url_norm").agg(
-                F.count(F.lit(1)).alias("_mn")
-            )
-            merged_mn = (
-                wave_mn
-                if self._miss_counts is None
-                else self._miss_counts.unionByName(wave_mn)
-                .groupBy("url_norm")
-                .agg(F.sum("_mn").alias("_mn"))
-            )
-            self._miss_counts = merged_mn.localCheckpoint(eager=True)
             retry_set = (
                 self._miss_counts.join(wave_miss, "url_norm")
                 .filter(F.col("_mn") <= cfg.retry_misses)
@@ -1720,7 +1691,7 @@ class CrawlEngine:
 
         # all five writes run concurrently on one pool; the gating pair
         # (frontier, visited+bloom) is what the NEXT wave's stage reads,
-        # so defer mode returns as soon as those land
+        # so the wave returns as soon as those land
         pool = ThreadPoolExecutor(max_workers=5)
         try:
             gating = [pool.submit(f) for f in (_w_frontier, _w_visited_bloom)]
@@ -1755,7 +1726,4 @@ class CrawlEngine:
             finally:
                 pool.shutdown(wait=False)
 
-        if defer:
-            return m, finish
-        finish()
-        return m
+        return m, finish

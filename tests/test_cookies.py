@@ -195,34 +195,25 @@ def test_resume_restores_cookie_jar(spark, cookie_fixture, tmp_path):
     assert "Authorization" not in eng2.request_headers()
 
 
-def test_streaming_crawl_keeps_the_cookie_jar(spark, cookie_fixture, tmp_path):
-    """The streaming loop joins the same pages side as the batch run()
-    (set_cookie included), so one micro-batch per wave accumulates the same
-    jar and visits the same keys."""
-    from brink_spark.sources.sitegen import (
-        pages_to_spark,
-        robots_to_spark,
-        seeds_to_spark,
-    )
-    from brink_spark.streaming.frontier_stream import StreamingCrawl
+def test_fresh_run_on_reused_engine_starts_from_config_jar(
+    spark, cookie_fixture, tmp_path
+):
+    """A fresh run() starts from the config's jar even when the engine ran
+    before: every wave commits the same jar and Authorization state as the
+    engine's first run, so no cookie from an earlier crawl reaches wave 0."""
+    engine = CrawlEngine(spark, cookie_fixture.config, str(tmp_path / "store"))
+    runs: list[list] = []
 
-    batch = CrawlEngine(spark, cookie_fixture.config, str(tmp_path / "batch"))
-    batch.run(fixture=cookie_fixture)
+    def record(_metrics):
+        man = engine.store.read_manifest()
+        runs[-1].append(
+            (man.last_wave, man.cookie_jar, man.auth_suppressed_since_wave)
+        )
 
-    engine = CrawlEngine(
-        spark,
-        cookie_fixture.config,
-        str(tmp_path / "stream"),
-        pages=pages_to_spark(spark, cookie_fixture),
-        robots=robots_to_spark(spark, cookie_fixture),
-    )
-    StreamingCrawl(engine).run_until_drained(
-        spark, seeds_to_spark(spark, cookie_fixture)
-    )
-    assert engine.cookie_jar == batch.cookie_jar
-
-    def keys(eng):
-        man = eng.store.read_manifest()
-        return {r["url_norm"] for r in eng.store.read_visited(spark, man).collect()}
-
-    assert keys(engine) == keys(batch)
+    engine.on_wave_committed = record
+    for _ in range(2):
+        runs.append([])
+        engine.run(fixture=cookie_fixture)
+    assert runs[0][0] == (0, {"greeting": "hi", "JSESSIONID": "abc"}, 1)
+    assert runs[1] == runs[0]
+    assert engine.cookie_jar == crawl_oracle(cookie_fixture).cookie_jar

@@ -116,3 +116,82 @@ def test_request_stop_ends_run_and_resume_continues(spark, tiny_fixture, tmp_pat
     assert engine.store.read_manifest().last_wave == waves - 1
     cmp = compare_engine_oracle(spark, engine, oracle)
     assert cmp.all_match, cmp.detail
+
+
+def test_resume_with_new_seed_converges_to_union_crawl(spark, tmp_path):
+    """Late seeds: a crawl from one seed drains, then resume with a NEW
+    seed continues from the accumulated visited state. The final visited
+    set and per-doc spans equal the crawl of the seed UNION (crawl order
+    cannot: the late seed starts late by construction)."""
+    import pyspark.sql.functions as F
+
+    from brink_spark.config import CrawlConfig
+    from brink_spark.functions.spans import Span, render_html
+    from brink_spark.functions.urls import normalize_url, scheme_and_host
+    from brink_spark.sources.sitegen import Page, SiteFixture
+
+    def _page(url, links=()):
+        spans, off = [], 0
+        for h in links:
+            spans.append(Span("link", h, None, off))
+            off += len(h)
+        scheme, host = scheme_and_host(url)
+        return Page(
+            url_norm=normalize_url(url, (), False), url=url, host=host,
+            scheme=scheme, status=200, content_length=500,
+            body=render_html(spans), spans=spans,
+        )
+
+    # two chains; /shared is reachable from both (cross-run dedup)
+    pages = [
+        _page("https://s.example/a1", links=["/a2"]),
+        _page("https://s.example/a2", links=["/shared"]),
+        _page("https://s.example/b1", links=["/b2"]),
+        _page("https://s.example/b2", links=["/shared"]),
+        _page("https://s.example/shared"),
+    ]
+    cfg = CrawlConfig("https://s.example/a1", max_waves=50)
+
+    def _fixture(name, seed_urls):
+        return SiteFixture(
+            scale=name, seed=0, pages=pages,
+            seeds=[{"url": u, "priority": 0} for u in seed_urls],
+            robots=[], config=cfg,
+        )
+
+    fx = _fixture("late", ["https://s.example/a1"])
+    engine = CrawlEngine(spark, cfg, str(tmp_path / "store"))
+    s1 = engine.run(fixture=fx)  # chain A drains
+    waves_phase1 = engine.store.read_manifest().last_wave
+
+    late = spark.createDataFrame(
+        [("https://s.example/b1", 0)], "url string, priority int"
+    )
+    s2 = engine.run(fixture=fx, resume=True, seeds=late)
+    assert s2.total_fetched > 0  # the late seed actually crawled
+    man = engine.store.read_manifest()
+    assert man.last_wave > waves_phase1
+    assert s1.total_fetched + s2.total_fetched == len(pages)
+
+    union_oracle = crawl_oracle(
+        _fixture("late_union", ["https://s.example/a1", "https://s.example/b1"])
+    )
+    got = {
+        r["url_norm"]: r["status"]
+        for r in engine.store.read_visited(spark, man).collect()
+    }
+    assert got == union_oracle.visited
+    res = spark.read.parquet(
+        *[engine.store.wave_dir("results", w) for w in range(man.last_wave + 1)
+          if engine.store.has("results", w)]
+    )
+    for r in res.filter(~F.col("cached")).collect():
+        want = [
+            (s.kind, s.text, s.media_ref, s.offset)
+            for s in union_oracle.spans_by_doc[r["url_norm"]]
+        ]
+        have = [
+            (s["kind"], s["text"], s["media_ref"], s["offset"])
+            for s in (r["spans"] or [])
+        ]
+        assert have == want, r["url_norm"]

@@ -102,15 +102,18 @@ def test_retry_engine_matches_oracle(spark, miss_pages, tmp_path):
     fx = _fixture(miss_pages, _config(RETRIES), "retry_orc")
     oracle = crawl_oracle(fx)
     engine, summary = _run(spark, fx, tmp_path, "retry_orc")
-    comparison = compare_engine_oracle(spark, engine, oracle)
-    assert comparison.visited_match, comparison.detail
-    assert comparison.order_match, comparison.detail
-    assert comparison.handler_match, comparison.detail
-    assert comparison.spans_match, comparison.detail.get("span_diffs")
-    assert len(summary.wave_metrics) == len(oracle.metrics)
-    for em, om in zip(summary.wave_metrics, oracle.metrics):
-        for key, want in om.items():
-            assert em.get(key) == want, (om["wave"], key, em.get(key), want)
+    for rerun in (False, True):
+        if rerun:  # the same engine, fresh: no counts carry over from run 1
+            summary = engine.run(fixture=fx)
+        comparison = compare_engine_oracle(spark, engine, oracle)
+        assert comparison.visited_match, comparison.detail
+        assert comparison.order_match, comparison.detail
+        assert comparison.handler_match, comparison.detail
+        assert comparison.spans_match, comparison.detail.get("span_diffs")
+        assert len(summary.wave_metrics) == len(oracle.metrics)
+        for em, om in zip(summary.wave_metrics, oracle.metrics):
+            for key, want in om.items():
+                assert em.get(key) == want, (om["wave"], key, em.get(key), want)
 
 
 def test_retry_counts_survive_resume(spark, miss_pages, tmp_path):

@@ -213,3 +213,27 @@ def test_host_cap_survives_resume(spark, wide_pages, tmp_path):
     # waves 0-1 before the cut, 2-3 after; lifetime attempts still == cap
     total_attempts = 2 + 1 + sum(m["n_fetched"] for m in summary2.wave_metrics)
     assert total_attempts == HOST_CAP
+
+
+def test_fold_counts_sum_merges_across_waves(spark):
+    """The lifetime count tables (host, template, per-url miss) fold wave
+    by wave: folding batches one at a time equals counting their union, and
+    a wave with no attempts carries every count through."""
+    from brink_spark.plans.crawl import _fold_counts
+
+    a = spark.createDataFrame([("h1",), ("h1",), ("h2",)], "host string")
+    b = spark.createDataFrame([("h2",), ("h3",)], "host string")
+
+    first = _fold_counts(None, a, "host", "_taken")
+    assert first.columns == ["host", "_taken"]
+    assert dict(first.collect()) == {"h1": 2, "h2": 1}
+
+    both = _fold_counts(first, b, "host", "_taken")
+    assert both.columns == ["host", "_taken"]
+    assert dict(both.collect()) == {"h1": 2, "h2": 2, "h3": 1}
+    assert dict(both.collect()) == dict(
+        _fold_counts(None, a.unionByName(b), "host", "_taken").collect()
+    )
+    assert dict(_fold_counts(both, b.limit(0), "host", "_taken").collect()) == {
+        "h1": 2, "h2": 2, "h3": 1,
+    }
