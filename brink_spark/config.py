@@ -131,7 +131,6 @@ class CrawlConfig:
     # waves — same results and same per-wave durability order, used by
     # bench.py's pipelined-vs-sync A/B and as a debugging fallback.
     pipeline_waves: bool = True
-    use_bloom: bool = True
     bloom_shards: int = 16
     bloom_bits_per_shard: int = 1 << 20
     bloom_num_hashes: int = 5
@@ -140,7 +139,6 @@ class CrawlConfig:
     # activate once total visited crosses this (0 = always on). On
     # activation the shards are built once from the full visited set.
     bloom_min_visited: int = 100_000
-    politeness_salts: int = 8  # two-phase top-k fan-out for hot hosts
     # HTTP-304-style recrawl fast path: when an EXPIRED url is refetched
     # and its body hash equals the stored hash, classify the fetch
     # "not_modified" — the parse stage is skipped (its links were already

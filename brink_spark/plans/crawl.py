@@ -37,10 +37,8 @@ Scale notes (the 10^10 design point):
 
 from __future__ import annotations
 
-import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
@@ -73,18 +71,6 @@ FRONTIER_SCHEMA = StructType(
         StructField("depth", IntegerType()),
     ]
 )
-
-
-def _with_depth(frontier: DataFrame) -> DataFrame:
-    """Back-compat: frontier tables written before the depth column
-    existed (old stores resumed with a new engine) read as depth 0."""
-    if "depth" in frontier.columns:
-        # depth is nullable in FRONTIER_SCHEMA; a null reads as the seed
-        # depth
-        return frontier.withColumn(
-            "depth", F.coalesce("depth", F.lit(0)).cast("int")
-        )
-    return frontier.withColumn("depth", F.lit(0))
 
 
 # the fetchlog outcomes that were real requests; its other rows
@@ -171,16 +157,13 @@ class CrawlEngine:
         self.norm_udf = make_normalize_udf(
             config.ignore_get_parameters, config.fuzzy_get_parameter_checks
         ).asNondeterministic()
-        # the approximate seen-prefilter (sharded Bloom); None when
-        # use_bloom is off, in which case mark_seen is exact-join only
-        self.bloom = (
-            BloomSeenSet(
-                config.bloom_shards,
-                config.bloom_bits_per_shard,
-                config.bloom_num_hashes,
-            )
-            if config.use_bloom
-            else None
+        # the approximate seen-prefilter (sharded Bloom); a wave probes it
+        # only once total visited reaches bloom_min_visited (_mark), below
+        # that mark_seen is exact-join only
+        self.bloom = BloomSeenSet(
+            config.bloom_shards,
+            config.bloom_bits_per_shard,
+            config.bloom_num_hashes,
         )
         self._rules = robots_rules_per_host(robots) if robots is not None else None
         self._budgets = budget_per_host(robots, config.politeness_budget)
@@ -396,12 +379,7 @@ class CrawlEngine:
             self.spark, "fetchlog", manifest.last_wave
         ).withColumn("template", url_template(F.col("url_norm")))
         out = (
-            flog.filter(
-                F.col("outcome").isin(
-                    "miss", "not_allowed", "too_large", "ok", "not_modified",
-                    "template_capped",
-                )
-            )
+            flog.filter(F.col("outcome").isin(*ATTEMPT_OUTCOMES, "template_capped"))
             .groupBy("template")
             .agg(
                 F.countDistinct(
@@ -469,22 +447,18 @@ class CrawlEngine:
         transport misses (retry_misses)."""
         cfg = self.config
         if cfg.max_pages_per_host > 0:
-            with self._phase("host-taken"):
-                self._host_taken = _fold_counts(
-                    self._host_taken, attempts, "host", "_taken"
-                )
+            self._host_taken = _fold_counts(
+                self._host_taken, attempts, "host", "_taken"
+            )
         if cfg.max_pages_per_template > 0:
             from brink_spark.functions.templates import url_template
 
-            with self._phase("template-taken"):
-                self._template_taken = _fold_counts(
-                    self._template_taken,
-                    attempts.select(
-                        url_template(F.col("url_norm")).alias("template")
-                    ),
-                    "template",
-                    "_ttaken",
-                )
+            self._template_taken = _fold_counts(
+                self._template_taken,
+                attempts.select(url_template(F.col("url_norm")).alias("template")),
+                "template",
+                "_ttaken",
+            )
         if cfg.retry_misses > 0:
             self._miss_counts = _fold_counts(
                 self._miss_counts,
@@ -608,9 +582,9 @@ class CrawlEngine:
                     F.lit(0).alias("depth"),
                 )
                 if self.store.has("frontier", wave):
-                    existing = _with_depth(
-                        self.store.read(self.spark, "frontier", wave)
-                    ).select("linked_from", "url", "priority", "depth")
+                    existing = self.store.read(self.spark, "frontier", wave).select(
+                        "linked_from", "url", "priority", "depth"
+                    )
                     extra = existing.unionByName(extra)
                 self.store.rewrite(extra, "frontier", wave)
 
@@ -845,8 +819,7 @@ class CrawlEngine:
         if K <= 0 or wave == 0 or wave % K != 0:
             return frontier
         if not self.store.has("ranks", wave):
-            with self._phase("rank-compute"):
-                self.store.write(self._compute_ranks(wave), "ranks", wave)
+            self.store.write(self._compute_ranks(wave), "ranks", wave)
         ranks = self.store.read(self.spark, "ranks", wave)
         rank_prio = ranks.select(
             F.col("url_norm").alias("_pn"),
@@ -967,6 +940,13 @@ class CrawlEngine:
             "spans",
             "partition_id",
         ]
+        # one counter per attempt outcome; only the refetch-skip path
+        # produces not_modified
+        attempts = [
+            o
+            for o in ATTEMPT_OUTCOMES
+            if o != "not_modified" or cfg.refetch_skip_unchanged
+        ]
         stage_aggs = [
             F.count(F.lit(1)).alias("n_edges"),
             F.count_if(F.col("edge_kind") == "seen").alias("n_cached"),
@@ -977,15 +957,7 @@ class CrawlEngine:
             F.count_if(fresh1 & F.col("template_capped")).alias(
                 "n_template_capped"
             ),
-            F.count_if(F.col("outcome") == "miss").alias("n_miss"),
-            F.count_if(F.col("outcome") == "not_allowed").alias("n_not_allowed"),
-            F.count_if(F.col("outcome") == "too_large").alias("n_too_large"),
-            F.count_if(F.col("outcome") == "ok").alias("n_ok"),
-        ] + (
-            [F.count_if(F.col("outcome") == "not_modified").alias("n_not_modified")]
-            if cfg.refetch_skip_unchanged
-            else []
-        )
+        ] + [F.count_if(F.col("outcome") == o).alias(f"n_{o}") for o in attempts]
         edge_log_filter = fresh1 & (F.col("robots_denied") | ~F.col("eligible"))
         edge_log_outcome = (
             F.when(F.col("robots_denied"), "robots_denied")
@@ -1087,6 +1059,14 @@ class CrawlEngine:
             F.lit("seen").alias("row_kind"),
             F.lit(None).cast(SPANS_TYPE).alias("spans"),
         ]
+        res_notmod_tail = [
+            "linked_from",
+            "url_norm",
+            F.col("page_status").alias("status"),
+            F.lit(False).alias("cached"),
+            F.lit("not_modified").alias("row_kind"),
+            F.lit(None).cast(SPANS_TYPE).alias("spans"),
+        ]
         self._wx = SimpleNamespace(
             norm_cols=norm_cols,
             outcome_ok=F.col("outcome") == "ok",
@@ -1097,6 +1077,7 @@ class CrawlEngine:
             res_first_tail=res_first_tail,
             res_others_tail=res_others_tail,
             res_seen_tail=res_seen_tail,
+            res_notmod_tail=res_notmod_tail,
             urlnorm_notnull=F.col("url_norm").isNotNull(),
             status_isnull=F.col("status").isNull(),
             is_fresh=F.col("_is_fresh"),
@@ -1118,6 +1099,8 @@ class CrawlEngine:
             pid_expr=F.spark_partition_id(),
             stage_cols=stage_cols,
             stage_aggs=stage_aggs,
+            attempt_keys=[f"n_{o}" for o in attempts],
+            hash_cols=["content_hash"] if cfg.refetch_skip_unchanged else [],
             unit_prio_as_prio=F.col("unit_priority").alias("priority"),
             edge_log_filter=edge_log_filter,
             edge_log_outcome=edge_log_outcome,
@@ -1136,14 +1119,222 @@ class CrawlEngine:
         )
         return self._wx
 
-    @contextmanager
-    def _phase(self, name: str):
-        if os.environ.get("BRINK_TIMING"):
-            t0 = time.time()
-            yield
-            print(f"    [{name}] {time.time()-t0:.2f}s", flush=True)
+    # ------------------------------------------------------------------
+    def _run_wave(
+        self,
+        wave: int,
+        manifest: Manifest,
+        pages_slim: DataFrame,
+    ):
+        """One wave as ONE materialized stage + shallow projections, run as
+        named stages in pipeline order: ``_mark`` (normalize, seen mark,
+        unit windows, checkpoint) -> ``_flag`` (robots, template cap,
+        politeness) -> ``_fetch_parse`` -> ``_materialize`` (the wavestage
+        write and the wave's metrics) -> ``_merge_cookies`` -> ``_outputs``
+        (the table projections) -> ``_start_writes``.
+
+        Returns ``None`` on an empty frontier, else ``(metrics, finish)``
+        after only the GATING writes — frontier(wave+1) and visited+bloom,
+        the tables the next wave's stage reads — have committed;
+        ``finish()`` blocks on the remaining writes (fetchlog, results,
+        lineage) and writes the metrics row. run() starts wave N+1's stage
+        while finish(N) drains, overlapping the next wave's big
+        materialization with this wave's auxiliary flushes (the spans
+        payload in results is the widest write of the wave). Crash
+        semantics are unchanged: the manifest commits only after
+        finish(), so an interrupted overlap leaves wave N (and any N+1
+        partials) uncommitted and clean_uncommitted recomputes them.
+
+        The ``wavestage`` scratch table holds the flagged edges (edge
+        grain) with the fetch columns riding the same write, populated only
+        on each unit's rank-1 eligible row. Every output table
+        (fetchlog/visited/bloom/results/frontier) is a flat
+        filter/projection of this one scratch parquet table.
+
+        Materializing the deep DAG exactly once keeps the driver out of
+        the picture: without this, each action re-analyzes the full
+        lineage (Catalyst planning is serial driver time) and the wave's
+        wall clock is dominated by plan depth rather than data. Fusing
+        the fetch into the same materialization saves a second full
+        plan+submit+write+read cycle per wave — the fixed cost that
+        dominated the wave wall at bench scale. This is also the
+        Iceberg-native shape: the scratch stage is an ordinary table.
+
+        Metrics ride the writes: every per-wave counter is an Observation
+        attached to the FINAL pre-write node of an existing write job (a
+        node that appears once in the plan — observing an interior fan-out
+        node would double-count), so no separate groupBy().count().collect()
+        jobs run. n_frontier is observed on the PREVIOUS wave's frontier
+        write and carried forward; only the per-partition lineage diagnostic
+        (collect_metrics=True) costs an extra action.
+        """
+        frontier = self._reprioritize_frontier(
+            wave, self.store.read(self.spark, "frontier", wave)
+        )
+        n_frontier = self._pending_frontier_count
+        if n_frontier is None:  # resume: one columnless parquet count
+            n_frontier = frontier.count()
+        if n_frontier == 0:
+            return None
+        marked, bloom_shards = self._mark(frontier, manifest)
+        joined = self._fetch_parse(self._flag(marked), pages_slim)
+        edges, m = self._materialize(wave, joined, n_frontier)
+        fetched = edges.filter(self._wave_exprs().outcome_notnull)
+        # lifetime attempt counts: every outcome-bearing row was a fetch
+        # ATTEMPT. The folds read the already-materialized scratch parquet
+        # and are only paid while a guard is on.
+        self._fold_attempts(fetched)
+        self._merge_cookies(wave, fetched)
+        tables, obs_next = self._outputs(wave, edges, fetched, m)
+        return self._start_writes(wave, m, tables, obs_next, fetched, bloom_shards)
+
+    def _mark(
+        self, frontier: DataFrame, manifest: Manifest
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """Normalize (B1) -> malformed drop (C7) -> seen mark (E1/H1/H2) ->
+        unit windows, checkpointed once. Returns the marked edges and the
+        Bloom shards the wave probed (None while the prefilter is off)."""
+        spark, store, cfg = self.spark, self.store, self.config
+        wx = self._wave_exprs()
+        norm = frontier.withColumn("_p", self.norm_udf("url")).select(
+            *wx.norm_cols
+        )
+        edges_all = norm.filter(wx.urlnorm_notnull)
+
+        visited = store.read_visited(spark, manifest)
+        # adaptive Bloom: the prefilter costs one Arrow cogroup pass and only
+        # wins when the exact anti-join's build side is big — stay exact-only
+        # below the threshold; on the activation wave build the shards once
+        # from the full visited set (lazy DF — materialized by this wave's
+        # probe + bloom write)
+        bloom_shards = None
+        if manifest.total_visited >= cfg.bloom_min_visited:
+            if manifest.last_wave >= 0 and store.has("bloom", manifest.last_wave):
+                bloom_shards = store.read(spark, "bloom", manifest.last_wave)
+            elif visited is not None:
+                bloom_shards = self.bloom.updated(visited, self.bloom.empty(spark))
+            else:
+                bloom_shards = self.bloom.empty(spark)
+        marked = mark_seen(
+            edges_all,
+            visited,
+            self.bloom if bloom_shards is not None else None,
+            bloom_shards,
+        ).withColumn("_is_fresh", wx.status_isnull)
+        # rank edges within their unit; first edge wins the fetch. The
+        # windows run on the MARKED table (before the split): a url_norm is
+        # never both fresh and cached within a wave (its seen verdict is a
+        # property of the key), and _is_fresh in the partition key makes
+        # that independence structural — so fresh rows get exactly the
+        # ranks the old fresh-only window produced, and the cached rows'
+        # window values are simply never read (cached_flagged projects
+        # literals). Computing them pre-checkpoint means ONE url_norm
+        # shuffle per wave instead of one per branch (the plan referenced
+        # the windowed fresh edges from four subtrees, two of which could
+        # not share an exchange because WindowGroupLimit specialized them).
+        # Condition: live visited holds at most one row per url_norm, else
+        # mark_seen's visited join would duplicate a key's cached edges.
+        # Asserted by tests/test_e2e_crawl.py::
+        # test_live_visited_has_one_row_per_url (compaction) and
+        # tests/test_expiry.py::test_refetch_wins_over_tombstone (expiry).
+        marked = (
+            marked.withColumn("_edge_rank", wx.edge_rank_col)
+            .withColumn("unit_priority", wx.unit_priority_col)
+            # a page's depth is the MIN over its discovering edges (same
+            # window — no extra shuffle)
+            .withColumn("unit_depth", wx.unit_depth_col)
+        )
+        # One wave-sized materialization of the normalized, seen-tagged,
+        # unit-ranked edges. The wave plan fans out from this point into
+        # FIVE subtrees (units→politeness candidates / politeness rejected
+        # / the flags-join left side / cached / traversal), and Spark
+        # physical plans are trees: without the cut every branch re-ran the
+        # frontier scan, the normalize UDF, the visited join and the unit
+        # windows (measured: 5 copies of the scan+ArrowEvalPython subtree
+        # in one wave's plan, 15 AQE jobs / 26 stages per wave on a
+        # ~400-row frontier — the driver-side fixed cost that dominated the
+        # crawl bench). After the cut each branch reads a tiny in-memory
+        # RDD leaf. The checkpoint is wave-scoped scratch (the same bytes
+        # the wavestage write pushes to parquet), so memory stays bounded
+        # by one wave at any scale.
+        return marked.localCheckpoint(eager=True), bloom_shards
+
+    def _flag(self, marked: DataFrame) -> DataFrame:
+        """Split the marked edges into fresh and cached, gate the fresh
+        units (robots, template cap, politeness) and join the unit flags
+        back onto every fresh edge; returns both halves as one edge-grain
+        DataFrame in the wavestage column layout (minus the fetch)."""
+        cfg, wx = self.config, self._wave_exprs()
+        fresh = marked.filter(wx.is_fresh).drop("status", "_is_fresh")
+        cached = marked.filter(~wx.is_fresh).drop(
+            "_edge_rank", "unit_priority", "unit_depth", "_is_fresh"
+        )
+        units = with_robots_denied(fresh.filter(wx.rank1), self._rules)
+        # template trap guard (max_pages_per_template > 0): units whose
+        # URL template is already saturated drop before politeness — they
+        # never consume a budget rank, so a lower-priority real page on
+        # the same host admits in their place (the oracle's `continue`
+        # before the rank increment). The broadcast side carries ONLY
+        # saturated templates: unsaturated ones cannot block anything, so
+        # the join input stays trap-sized, not corpus-sized. Robots denial
+        # wins when both apply (the oracle checks robots in step 4).
+        if (
+            cfg.max_pages_per_template > 0
+            and self._template_taken is not None
+        ):
+            from brink_spark.functions.templates import url_template
+
+            blocked = (
+                self._template_taken.filter(
+                    F.col("_ttaken") >= cfg.max_pages_per_template
+                )
+                .select("template")
+                .withColumn("_tpl_blocked", F.lit(True))
+            )
+            units = (
+                units.withColumn("template", url_template(F.col("url_norm")))
+                .join(F.broadcast(blocked), "template", "left")
+                .withColumn(
+                    "_template_capped",
+                    F.coalesce("_tpl_blocked", F.lit(False))
+                    & ~F.col("_robots_denied"),
+                )
+                .drop("_tpl_blocked", "template")
+            )
         else:
-            yield
+            units = units.withColumn("_template_capped", F.lit(False))
+        polite_in = units.filter(
+            ~F.col("_robots_denied") & ~F.col("_template_capped")
+        )
+        if cfg.politeness_key == "site":
+            # site mode: every subdomain of one registrable site shares a
+            # single per-wave budget (functions/domains.py); budget
+            # resolution and the trap-guard cap stay host-keyed facts
+            from brink_spark.functions.domains import registrable_domain
+
+            polite_in = polite_in.withColumn(
+                "site", registrable_domain(F.col("host"))
+            )
+        polite = apply_politeness(
+            polite_in,
+            self._budgets,
+            cfg.politeness_budget,
+            host_counts=self._host_taken,
+            max_pages_per_host=cfg.max_pages_per_host,
+            key=cfg.politeness_key,  # validated in CrawlConfig.__post_init__
+        )
+        unit_flags = units.select(
+            "url_norm", "_robots_denied", "_template_capped"
+        ).join(
+            polite.select("url_norm", "_eligible", "_host_capped"),
+            "url_norm",
+            "left",
+        )
+        fresh_flagged = fresh.join(unit_flags, "url_norm", "left").select(
+            *wx.fresh_flagged_cols
+        )
+        cached_flagged = cached.select(*wx.cached_flagged_cols)
+        return fresh_flagged.unionByName(cached_flagged)
 
     def _fetch_parse(self, combined: DataFrame, pages_slim: DataFrame) -> DataFrame:
         """The wave's fetch+parse stage, edge grain: fetch (A1/H4: pages
@@ -1237,288 +1428,80 @@ class CrawlEngine:
             "partition_id", wx.pid_expr
         )
 
-    # ------------------------------------------------------------------
-    def _run_wave(
-        self,
-        wave: int,
-        manifest: Manifest,
-        pages_slim: DataFrame,
-    ):
-        """One wave as ONE materialized stage + shallow projections.
-
-        Returns ``None`` on an empty frontier, else ``(metrics, finish)``
-        after only the GATING writes — frontier(wave+1) and visited+bloom,
-        the tables the next wave's stage reads — have committed;
-        ``finish()`` blocks on the remaining writes (fetchlog, results,
-        lineage) and writes the metrics row. run() starts wave N+1's stage
-        while finish(N) drains, overlapping the next wave's big
-        materialization with this wave's auxiliary flushes (the spans
-        payload in results is the widest write of the wave). Crash
-        semantics are unchanged: the manifest commits only after
-        finish(), so an interrupted overlap leaves wave N (and any N+1
-        partials) uncommitted and clean_uncommitted recomputes them.
-
-        The ``wavestage`` scratch table (edge grain): normalize ->
-        seen-split (Bloom prefilter + exact joins) -> per-unit edge
-        ranking -> robots gate -> politeness eligibility joined back onto
-        every edge, THEN the fetch columns ride the same write
-        (``_fetch_parse``: pages equi-join or socket fetch + gates + span
-        parse, populated only on each unit's rank-1 eligible row). Every output
-        table (fetchlog/visited/bloom/results/frontier) is a flat
-        filter/projection of this one scratch parquet table.
-
-        Materializing the deep DAG exactly once keeps the driver out of
-        the picture: without this, each action re-analyzes the full
-        lineage (Catalyst planning is serial driver time) and the wave's
-        wall clock is dominated by plan depth rather than data. Fusing
-        the fetch into the same materialization saves a second full
-        plan+submit+write+read cycle per wave — the fixed cost that
-        dominated the wave wall at bench scale. This is also the
-        Iceberg-native shape: the scratch stage is an ordinary table.
-
-        Metrics ride the writes: every per-wave counter is an Observation
-        attached to the FINAL pre-write node of an existing write job (a
-        node that appears once in the plan — observing an interior fan-out
-        node would double-count), so no separate groupBy().count().collect()
-        jobs run. n_frontier is observed on the PREVIOUS wave's frontier
-        write and carried forward; only the per-partition lineage diagnostic
-        (collect_metrics=True) costs an extra action.
-        """
-        spark, store, cfg = self.spark, self.store, self.config
-        wx = self._wave_exprs()
-        frontier = self._reprioritize_frontier(
-            wave, _with_depth(store.read(spark, "frontier", wave))
-        )
-        m = dict(wave=wave)
-
-        n_frontier = self._pending_frontier_count
-        if n_frontier is None:  # resume: one columnless parquet count
-            with self._phase("frontier-count"):
-                n_frontier = frontier.count()
-        m["n_frontier"] = n_frontier
-        if n_frontier == 0:
-            return None
-
-        norm = frontier.withColumn("_p", self.norm_udf("url")).select(
-            *wx.norm_cols
-        )
-        edges_all = norm.filter(wx.urlnorm_notnull)
-
-        visited = store.read_visited(spark, manifest)
-        # adaptive Bloom: the prefilter costs one Arrow cogroup pass and only
-        # wins when the exact anti-join's build side is big — stay exact-only
-        # below the threshold; on the activation wave build the shards once
-        # from the full visited set (lazy DF — materialized by this wave's
-        # probe + bloom write)
-        use_bloom = self.bloom is not None and (
-            cfg.bloom_min_visited == 0
-            or manifest.total_visited >= cfg.bloom_min_visited
-        )
-        if use_bloom:
-            if manifest.last_wave >= 0 and store.has("bloom", manifest.last_wave):
-                bloom_shards = store.read(spark, "bloom", manifest.last_wave)
-            elif visited is not None:
-                bloom_shards = self.bloom.updated(visited, self.bloom.empty(spark))
-            else:
-                bloom_shards = self.bloom.empty(spark)
-        else:
-            bloom_shards = None
-        marked = mark_seen(
-            edges_all, visited, self.bloom if use_bloom else None, bloom_shards
-        ).withColumn("_is_fresh", wx.status_isnull)
-        # rank edges within their unit; first edge wins the fetch. The
-        # windows run on the MARKED table (before the split): a url_norm is
-        # never both fresh and cached within a wave (its seen verdict is a
-        # property of the key), and _is_fresh in the partition key makes
-        # that independence structural — so fresh rows get exactly the
-        # ranks the old fresh-only window produced, and the cached rows'
-        # window values are simply never read (cached_flagged projects
-        # literals). Computing them pre-checkpoint means ONE url_norm
-        # shuffle per wave instead of one per branch (the plan referenced
-        # the windowed fresh edges from four subtrees, two of which could
-        # not share an exchange because WindowGroupLimit specialized them).
-        # Condition: live visited holds at most one row per url_norm, else
-        # mark_seen's visited join would duplicate a key's cached edges.
-        # Asserted by tests/test_e2e_crawl.py::
-        # test_live_visited_has_one_row_per_url (compaction) and
-        # tests/test_expiry.py::test_refetch_wins_over_tombstone (expiry).
-        marked = (
-            marked.withColumn("_edge_rank", wx.edge_rank_col)
-            .withColumn("unit_priority", wx.unit_priority_col)
-            # a page's depth is the MIN over its discovering edges (same
-            # window — no extra shuffle)
-            .withColumn("unit_depth", wx.unit_depth_col)
-        )
-        # One wave-sized materialization of the normalized, seen-tagged,
-        # unit-ranked edges. The wave plan fans out from this point into
-        # FIVE subtrees (units→politeness candidates / politeness rejected
-        # / the flags-join left side / cached / traversal), and Spark
-        # physical plans are trees: without the cut every branch re-ran the
-        # frontier scan, the normalize UDF, the visited join and the unit
-        # windows (measured: 5 copies of the scan+ArrowEvalPython subtree
-        # in one wave's plan, 15 AQE jobs / 26 stages per wave on a
-        # ~400-row frontier — the driver-side fixed cost that dominated the
-        # crawl bench). After the cut each branch reads a tiny in-memory
-        # RDD leaf. The checkpoint is wave-scoped scratch (the same bytes
-        # the wavestage write pushes to parquet), so memory stays bounded
-        # by one wave at any scale.
-        marked = marked.localCheckpoint(eager=True)
-        fresh = marked.filter(wx.is_fresh).drop("status", "_is_fresh")
-        cached = marked.filter(~wx.is_fresh).drop(
-            "_edge_rank", "unit_priority", "unit_depth", "_is_fresh"
-        )
-        units = with_robots_denied(fresh.filter(wx.rank1), self._rules)
-        # template trap guard (max_pages_per_template > 0): units whose
-        # URL template is already saturated drop before politeness — they
-        # never consume a budget rank, so a lower-priority real page on
-        # the same host admits in their place (the oracle's `continue`
-        # before the rank increment). The broadcast side carries ONLY
-        # saturated templates: unsaturated ones cannot block anything, so
-        # the join input stays trap-sized, not corpus-sized. Robots denial
-        # wins when both apply (the oracle checks robots in step 4).
-        if (
-            cfg.max_pages_per_template > 0
-            and self._template_taken is not None
-        ):
-            from brink_spark.functions.templates import url_template
-
-            blocked = (
-                self._template_taken.filter(
-                    F.col("_ttaken") >= cfg.max_pages_per_template
-                )
-                .select("template")
-                .withColumn("_tpl_blocked", F.lit(True))
-            )
-            units = (
-                units.withColumn("template", url_template(F.col("url_norm")))
-                .join(F.broadcast(blocked), "template", "left")
-                .withColumn(
-                    "_template_capped",
-                    F.coalesce("_tpl_blocked", F.lit(False))
-                    & ~F.col("_robots_denied"),
-                )
-                .drop("_tpl_blocked", "template")
-            )
-        else:
-            units = units.withColumn("_template_capped", F.lit(False))
-        polite_in = units.filter(
-            ~F.col("_robots_denied") & ~F.col("_template_capped")
-        )
-        if cfg.politeness_key == "site":
-            # site mode: every subdomain of one registrable site shares a
-            # single per-wave budget (functions/domains.py); budget
-            # resolution and the trap-guard cap stay host-keyed facts
-            from brink_spark.functions.domains import registrable_domain
-
-            polite_in = polite_in.withColumn(
-                "site", registrable_domain(F.col("host"))
-            )
-        polite = apply_politeness(
-            polite_in,
-            self._budgets,
-            cfg.politeness_budget,
-            cfg.politeness_salts,
-            host_counts=self._host_taken,
-            max_pages_per_host=cfg.max_pages_per_host,
-            key=cfg.politeness_key,  # validated in CrawlConfig.__post_init__
-        )
-        unit_flags = units.select(
-            "url_norm", "_robots_denied", "_template_capped"
-        ).join(
-            polite.select("url_norm", "_eligible", "_host_capped"),
-            "url_norm",
-            "left",
-        )
-        fresh_flagged = fresh.join(unit_flags, "url_norm", "left").select(
-            *wx.fresh_flagged_cols
-        )
-        cached_flagged = cached.select(*wx.cached_flagged_cols)
-        combined = fresh_flagged.unionByName(cached_flagged)
-
-        # --- fused fetch (A1/H4) + gates (C1/C2) + parse (D1), edge grain --
-        # One materialization per wave: the fetch/parse columns ride the
-        # SAME wavestage write as the edge flags. A separate fetch table
-        # would cost a second plan+submit+write+read cycle per wave, the
-        # fixed cost that dominated the wave wall at bench scale. Every
-        # output table below is a flat filter/projection of this one
-        # scratch table.
-        joined = self._fetch_parse(combined, pages_slim)
+    def _materialize(
+        self, wave: int, joined: DataFrame, n_frontier: int
+    ) -> tuple[DataFrame, dict]:
+        """The wave's one materialization: write the fetched and parsed
+        edges as the ``wavestage`` scratch table and read it back. Returns
+        the re-read edges and the wave's metrics, built from the
+        Observation that rode the write."""
+        store, wx = self.store, self._wave_exprs()
         cookie_cols = ["set_cookie"] if "set_cookie" in joined.columns else []
-        hash_cols = ["content_hash"] if cfg.refetch_skip_unchanged else []
         obs_stage = Observation(f"w{wave}_stage")
         stage_out = joined.select(
-            *wx.stage_cols, *cookie_cols, *hash_cols
+            *wx.stage_cols, *cookie_cols, *wx.hash_cols
         ).observe(obs_stage, *wx.stage_aggs)
-        with self._phase("stage-fused"):
-            store.write(stage_out, "wavestage", wave)
-        edges = store.read(spark, "wavestage", wave)
-        fetched = edges.filter(wx.outcome_notnull)
-        ec = obs_stage.get
-        m["n_cached"] = ec["n_cached"]
-        m["n_units"] = ec["n_units"]
-        m["n_robots_denied"] = ec["n_robots_denied"]
-        m["n_host_capped"] = ec["n_host_capped"]
-        m["n_template_capped"] = ec["n_template_capped"]
+        store.write(stage_out, "wavestage", wave)
+        edges = store.read(self.spark, "wavestage", wave)
+        ec = dict(obs_stage.get)
+        n_edges, n_eligible = ec.pop("n_edges"), ec.pop("n_eligible")
+        m = dict(wave=wave, n_frontier=n_frontier, **ec)
         m["n_deferred"] = (
             ec["n_units"]
             - ec["n_robots_denied"]
-            - ec["n_eligible"]
+            - n_eligible
             - ec["n_host_capped"]
             - ec["n_template_capped"]
         )
         # malformed = frontier rows minus all surviving edges
-        m["n_malformed"] = n_frontier - ec["n_edges"]
-        m["n_miss"] = ec["n_miss"]
-        m["n_not_allowed"] = ec["n_not_allowed"]
-        m["n_too_large"] = ec["n_too_large"]
-        m["n_ok"] = ec["n_ok"]
-        m["n_fetched"] = (
-            ec["n_miss"] + ec["n_not_allowed"] + ec["n_too_large"] + ec["n_ok"]
+        m["n_malformed"] = n_frontier - n_edges
+        # a not_modified row was a real fetch attempt too (HTTP-304 shape)
+        m["n_fetched"] = sum(ec[k] for k in wx.attempt_keys)
+        return edges, m
+
+    def _merge_cookies(self, wave: int, fetched: DataFrame) -> None:
+        """Response-cookie accumulation (brink.go:199-204): the reference
+        merges resp.Cookies() BEFORE the domain-allowed and content-length
+        gates, so every fetched response except a transport miss updates
+        the jar (not_allowed and too_large included). Merge order is
+        sorted(url_norm) — the wave model's deterministic stand-in for
+        goroutine arrival — so last-writer-wins per cookie name is
+        max_by(value, url_norm). The reduction runs in Spark (partial agg,
+        one row per distinct cookie name); the collect is bounded by the
+        number of distinct names, never by the number of pages."""
+        if "set_cookie" not in fetched.columns:
+            return
+        got = (
+            fetched.filter(
+                (F.col("outcome") != "miss") & F.col("set_cookie").isNotNull()
+            )
+            .select(
+                F.substring_index("set_cookie", "=", 1).alias("_name"),
+                # value = everything after the FIRST '=' ('' when absent),
+                # matching str.partition('=')
+                F.coalesce(
+                    F.element_at(F.split("set_cookie", "=", 2), 2), F.lit("")
+                ).alias("_value"),
+                "url_norm",
+            )
+            .groupBy("_name")
+            .agg(F.max_by("_value", "url_norm").alias("_value"))
+            .collect()
         )
-        if cfg.refetch_skip_unchanged:
-            # a not_modified row was a real fetch attempt (HTTP-304 shape)
-            m["n_not_modified"] = ec["n_not_modified"]
-            m["n_fetched"] += ec["n_not_modified"]
+        for r in got:
+            self.cookie_jar[r["_name"]] = r["_value"]
+        if got:
+            self._check_auth_suppression(wave + 1)
 
-        # lifetime attempt counts: every outcome-bearing row was a fetch
-        # ATTEMPT. The folds read the already-materialized scratch parquet
-        # and are only paid while a guard is on.
-        self._fold_attempts(fetched)
-
-        # response-cookie accumulation (brink.go:199-204): the reference
-        # merges resp.Cookies() BEFORE the domain-allowed and content-length
-        # gates, so every fetched response except a transport miss updates
-        # the jar (not_allowed and too_large included). Merge order is
-        # sorted(url_norm) — the wave model's deterministic stand-in for
-        # goroutine arrival — so last-writer-wins per cookie name is
-        # max_by(value, url_norm). The reduction runs in Spark (partial agg,
-        # one row per distinct cookie name); the collect is bounded by the
-        # number of distinct names, never by the number of pages.
-        if "set_cookie" in fetched.columns:
-            with self._phase("cookie-reduce"):
-                got = (
-                    fetched.filter(
-                        (F.col("outcome") != "miss") & F.col("set_cookie").isNotNull()
-                    )
-                    .select(
-                        F.substring_index("set_cookie", "=", 1).alias("_name"),
-                        # value = everything after the FIRST '=' ('' when
-                        # absent), matching str.partition('=')
-                        F.coalesce(
-                            F.element_at(F.split("set_cookie", "=", 2), 2), F.lit("")
-                        ).alias("_value"),
-                        "url_norm",
-                    )
-                    .groupBy("_name")
-                    .agg(F.max_by("_value", "url_norm").alias("_value"))
-                    .collect()
-                )
-            for r in got:
-                self.cookie_jar[r["_name"]] = r["_value"]
-            if got:
-                self._check_auth_suppression(wave + 1)
-
-        # --- flat projections ---------------------------------------------
+    def _outputs(
+        self, wave: int, edges: DataFrame, fetched: DataFrame, m: dict
+    ) -> tuple[dict[str, DataFrame], Observation]:
+        """The wave's output tables as flat projections of the wavestage
+        edges: fetchlog, visited, results (the A4 handler rows) and the
+        next frontier (traversal D1/D2/C3/C4/C5/C6 plus deferred and retried
+        edges). Returns them keyed by table name, with the Observation
+        riding the frontier write; sets ``n_miss_retry`` in ``m``."""
+        cfg, wx = self.config, self._wave_exprs()
         wave_lit = F.lit(wave).alias("wave")
         log_cols = lambda df, outcome_col, pid_col: df.select(  # noqa: E731
             wave_lit,
@@ -1546,6 +1529,11 @@ class CrawlEngine:
             if cfg.refetch_skip_unchanged
             else ok
         )
+        # not_modified rows re-arm the seen set too, and the content hash
+        # rides along for the NEXT expiry cycle
+        visited_out = okish.select(
+            "url_norm", F.col("page_status").alias("status"), wave_lit, *wx.hash_cols
+        )
 
         # --- handler rows (A4) ----------------------------------------------
         results_first = ok.select(wave_lit, *wx.res_first_tail)
@@ -1565,18 +1553,11 @@ class CrawlEngine:
             # HTTP-304 handler shape: the callback is told the url was
             # re-checked (real fetch, current status) but gets no body —
             # exactly the cached-row contract, distinct row_kind
-            results_notmod = fetched.filter(
-                F.col("outcome") == "not_modified"
-            ).select(
-                F.lit(wave).alias("wave"),
-                "linked_from",
-                "url_norm",
-                F.col("page_status").alias("status"),
-                F.lit(False).alias("cached"),
-                F.lit("not_modified").alias("row_kind"),
-                F.lit(None).cast(SPANS_TYPE).alias("spans"),
+            results_out = results_out.unionByName(
+                fetched.filter(F.col("outcome") == "not_modified").select(
+                    wave_lit, *wx.res_notmod_tail
+                )
             )
-            results_out = results_out.unionByName(results_notmod)
 
         # --- traversal -> next frontier (D1/D2/C3/C4/C5/C6) ------------------
         trav = ok.filter(wx.trav_filter)
@@ -1631,7 +1612,27 @@ class CrawlEngine:
             .filter(~F.col("_depth_capped"))
             .drop("_depth_capped")
         )
-        # --- commit all output tables concurrently ---------------------------
+        tables = dict(
+            frontier=frontier_next,
+            visited=visited_out,
+            fetchlog=fetchlog_out,
+            results=results_out,
+        )
+        return tables, obs_next
+
+    def _start_writes(
+        self,
+        wave: int,
+        m: dict,
+        tables: dict[str, DataFrame],
+        obs_next: Observation,
+        fetched: DataFrame,
+        bloom_shards: DataFrame | None,
+    ):
+        """Commit the wave's output tables concurrently and return
+        ``(m, finish)`` once the gating pair has landed (see _run_wave)."""
+        spark, store, cfg = self.spark, self.store, self.config
+
         # fetchlog / visited->bloom / results / frontier (+ the lineage
         # readback) are independent projections of the two materialized
         # scratch tables; submitting them from driver threads overlaps their
@@ -1639,66 +1640,40 @@ class CrawlEngine:
         # sharing the executors (same total work, 1/4 the barrier wall).
         # All futures complete before the caller commits the manifest, so
         # crash-resume semantics are unchanged.
-        def _w_fetchlog():
-            with self._phase("fetchlog"):
-                store.write(fetchlog_out, "fetchlog", wave)
-
         def _w_visited_bloom():
-            with self._phase("visited-write"):
-                if cfg.refetch_skip_unchanged:
-                    # not_modified rows re-arm the seen set too, and the
-                    # content hash rides along for the NEXT expiry cycle
-                    vrows = fetched.filter(
-                        F.col("outcome").isin("ok", "not_modified")
-                    ).select(
-                        "url_norm",
-                        F.col("page_status").alias("status"),
-                        F.lit(wave).alias("wave"),
-                        "content_hash",
-                    )
-                else:
-                    vrows = ok.select(
-                        "url_norm",
-                        F.col("page_status").alias("status"),
-                        F.lit(wave).alias("wave"),
-                    )
-                store.write(vrows, "visited", wave)
-            if use_bloom:
-                with self._phase("bloom-update"):
-                    store.write(
-                        self.bloom.updated(
-                            store.read(spark, "visited", wave), bloom_shards
-                        ),
-                        "bloom",
-                        wave,
-                    )
-
-        def _w_results():
-            with self._phase("results-write"):
-                store.write(results_out, "results", wave)
-
-        def _w_frontier():
-            with self._phase("frontier-write"):
-                store.write(frontier_next, "frontier", wave + 1)
+            store.write(tables["visited"], "visited", wave)
+            if bloom_shards is not None:
+                store.write(
+                    self.bloom.updated(
+                        store.read(spark, "visited", wave), bloom_shards
+                    ),
+                    "bloom",
+                    wave,
+                )
 
         lineage: dict[int, int] = {}
 
         def _r_lineage():
             if cfg.collect_metrics:  # per-partition lineage diagnostic (A5)
-                with self._phase("lineage-readback"):
-                    for r in fetched.groupBy("partition_id").count().collect():
-                        lineage[r["partition_id"]] = r["count"]
+                for r in fetched.groupBy("partition_id").count().collect():
+                    lineage[r["partition_id"]] = r["count"]
 
         # all five writes run concurrently on one pool; the gating pair
         # (frontier, visited+bloom) is what the NEXT wave's stage reads,
         # so the wave returns as soon as those land
         pool = ThreadPoolExecutor(max_workers=5)
         try:
-            gating = [pool.submit(f) for f in (_w_frontier, _w_visited_bloom)]
-            deferred = [pool.submit(f) for f in (_w_fetchlog, _w_results, _r_lineage)]
-            with self._phase("commit-writes-gating"):
-                for fut in gating:
-                    fut.result()  # re-raise the first failure
+            gating = [
+                pool.submit(store.write, tables["frontier"], "frontier", wave + 1),
+                pool.submit(_w_visited_bloom),
+            ]
+            deferred = [
+                pool.submit(store.write, tables["fetchlog"], "fetchlog", wave),
+                pool.submit(store.write, tables["results"], "results", wave),
+                pool.submit(_r_lineage),
+            ]
+            for fut in gating:
+                fut.result()  # re-raise the first failure
         except BaseException:
             # cancel queued deferred writes too — without cancel_futures
             # the fetchlog/results/lineage jobs keep running (and writing
@@ -1716,9 +1691,8 @@ class CrawlEngine:
             # remaining writes + metrics/lineage (A5); the caller commits
             # the manifest only after this returns
             try:
-                with self._phase("commit-writes-deferred"):
-                    for fut in deferred:
-                        fut.result()
+                for fut in deferred:
+                    fut.result()
                 store.write_metrics(
                     wave,
                     {**m, "lineage": {str(k): int(v) for k, v in lineage.items()}},

@@ -26,7 +26,13 @@ def three_runs(spark, tiny_fixture, tmp_path_factory):
         # activates between waves (tiny crawl visits a handful per wave)
         "adaptive": _crawl(spark, tiny_fixture, base.with_(bloom_min_visited=5), str(d / "a")),
         "always": _crawl(spark, tiny_fixture, base.with_(bloom_min_visited=0), str(d / "b")),
-        "never": _crawl(spark, tiny_fixture, base.with_(use_bloom=False), str(d / "c")),
+        # never activates: total visited cannot exceed the fixture's pages
+        "never": _crawl(
+            spark,
+            tiny_fixture,
+            base.with_(bloom_min_visited=len(tiny_fixture.pages) + 1),
+            str(d / "c"),
+        ),
     }
 
 

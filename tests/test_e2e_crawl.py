@@ -91,6 +91,21 @@ def test_live_visited_has_one_row_per_url(spark, tiny_run):
     assert live.count() == live.select("url_norm").distinct().count()
 
 
+def test_every_frontier_has_int_depth(spark, tiny_run):
+    """The wave reads ``depth`` as written, with no fallback: under
+    max_depth > 0 a null depth would drop its row silently. Every frontier
+    the shared run wrote (waves 0..last+1) carries an int ``depth`` with no
+    nulls."""
+    from pyspark.sql.types import IntegerType
+
+    engine, summary = tiny_run
+    for w in range(len(summary.wave_metrics) + 1):
+        assert engine.store.has("frontier", w), w
+        frontier = engine.store.read(spark, "frontier", w)
+        assert frontier.schema["depth"].dataType == IntegerType(), w
+        assert frontier.filter(F.col("depth").isNull()).count() == 0, w
+
+
 def test_fetch_partition_override_matches_oracle(spark, tiny_fixture, tmp_path):
     """fetch_partitions > 0 forces the salted repartition before the parse:
     the four contracts still hold and the fetches land in exactly the

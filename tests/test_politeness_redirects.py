@@ -56,7 +56,6 @@ def redirect_site():
         allowed_domains=("b.test",),
         politeness_budget=2,
         max_waves=6,
-        use_bloom=False,
     )
     fx = SiteFixture(
         scale="polite_redir", seed=0, pages=pages,

@@ -48,7 +48,6 @@ def miss_pages():
 def _config(retries):
     return CrawlConfig(
         entrypoint=f"{H}/d0", retry_misses=retries, max_waves=10,
-        use_bloom=False,
     )
 
 

@@ -223,7 +223,7 @@ def _discovery_fixture(discovery: bool):
         _raw_page("http://smap.test/sitemap.xml", DISCOVERY_SITEMAP),
     ]
     cfg = CrawlConfig(
-        entrypoint="http://smap.test/s", max_waves=6, use_bloom=False,
+        entrypoint="http://smap.test/s", max_waves=6,
         sitemap_discovery=discovery,
     )
     return SiteFixture(

@@ -72,7 +72,7 @@ def trap_pages():
 def _config():
     return CrawlConfig(
         entrypoint=f"{H}/d0", politeness_budget=10,
-        max_pages_per_template=TCAP, max_waves=12, use_bloom=False,
+        max_pages_per_template=TCAP, max_waves=12,
     )
 
 

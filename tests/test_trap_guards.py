@@ -83,7 +83,7 @@ def chain_pages():
 def _chain_config(max_depth):
     return CrawlConfig(
         entrypoint=f"{H}/d0", max_depth=max_depth,
-        max_waves=CHAIN_LEN + 2, use_bloom=False,
+        max_waves=CHAIN_LEN + 2,
     )
 
 
@@ -143,7 +143,7 @@ def wide_pages():
 def _wide_config():
     return CrawlConfig(
         entrypoint=f"{H}/d0", politeness_budget=2,
-        max_pages_per_host=HOST_CAP, max_waves=10, use_bloom=False,
+        max_pages_per_host=HOST_CAP, max_waves=10,
     )
 
 

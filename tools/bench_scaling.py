@@ -89,7 +89,8 @@ def prepare() -> None:
     bloom = BloomSeenSet(fx.config.bloom_shards, fx.config.bloom_bits_per_shard, fx.config.bloom_num_hashes)
     store.write(bloom.updated(store.read(spark, "visited", 0), bloom.empty(spark)), "bloom", 0)
 
-    # frontier = every link span on the synthetic web, one edge per anchor
+    # frontier = every link span on the synthetic web, one edge per anchor,
+    # in the engine's FRONTIER_SCHEMA columns (all at depth 0)
     frontier = (
         pages_r.select(
             F.col("url").alias("linked_from"),
@@ -99,7 +100,7 @@ def prepare() -> None:
             "linked_from",
             F.coalesce(F.col("_s.text"), F.lit("")).alias("url"),
             F.lit(0).alias("priority"),
-            F.lit(False).alias("deferred"),
+            F.lit(0).alias("depth"),
         )
     )
     store.write(frontier.repartition(64), "frontier", 1)
