@@ -164,7 +164,7 @@ class CrawlConfig:
     collect_metrics: bool = True
 
     def __post_init__(self):
-        # validate in the dataclass (not just from_toml) so a
+        # validate in the dataclass (from_toml builds through it too) so a
         # programmatically-built config with e.g. politeness_key='domain'
         # fails loudly instead of silently degrading to host mode
         # (plans/crawl.py keys politeness on 'site' only when the value is
@@ -288,6 +288,4 @@ def from_toml(path: str) -> CrawlConfig:
         warnings.warn(f"unknown TOML config keys ignored: {sorted(unknown)}")
     if "entrypoint" not in kwargs:
         raise ValueError("config missing 'entrypoint'")
-    if kwargs.get("politeness_key", "host") not in ("host", "site"):
-        raise ValueError("politeness-key must be 'host' or 'site'")
     return CrawlConfig(**kwargs)

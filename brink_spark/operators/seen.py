@@ -175,6 +175,10 @@ def mark_seen(
     """E1/H1/H2 as ONE DataFrame: every edge row tagged with the visited
     ``status`` (null = fresh, non-null = cached with that stored status).
 
+    One left join against ``visited`` yields both halves instead of an
+    anti + inner pair: ``visited`` (the table that grows without bound at
+    web scale) is scanned and shuffled once per wave, not twice.
+
     The single-table form exists so the wave loop can materialize the
     normalized/seen-tagged edges ONCE (localCheckpoint) before fanning out
     into the fresh/cached/units/politeness branches — the wave plan
@@ -209,28 +213,3 @@ def mark_seen(
         "maybe_seen"
     )
     return negatives.unionByName(_hit(positives))
-
-
-def split_seen(
-    edges: DataFrame,
-    visited: DataFrame | None,
-    bloom: BloomSeenSet | None = None,
-    bloom_shards: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """E1/H1/H2: split normalized frontier edges into (fresh, cached).
-
-    fresh  = edges whose url_norm is NOT in visited  (anti join, H1)
-    cached = edges ⋈ visited with the stored status   (inner join, H2)
-
-    Both halves come from ONE left join against ``visited`` (null status →
-    fresh, non-null → cached) instead of an anti + inner pair: ``visited``
-    (the table that grows without bound at web scale — the expensive side)
-    is scanned and shuffled once per wave, not twice, and the downstream
-    fresh∪cached union reuses a single exchange. See ``mark_seen`` for the
-    single-table form (and the Bloom fast-path semantics shared by both).
-    """
-    marked = mark_seen(edges, visited, bloom, bloom_shards)
-    return (
-        marked.filter(F.col("status").isNull()).drop("status"),
-        marked.filter(F.col("status").isNotNull()),
-    )

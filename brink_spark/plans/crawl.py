@@ -102,6 +102,15 @@ class CrawlSummary:
     wall_seconds: float = 0.0
     wave_metrics: list[dict] = field(default_factory=list)
 
+    def add(self, m: dict) -> None:
+        """Add one wave's metrics to the run totals."""
+        self.wave_metrics.append(m)
+        self.total_fetched += m.get("n_fetched", 0)
+        self.total_ok += m.get("n_ok", 0)
+        self.total_cached += m.get("n_cached", 0)
+        self.total_deferred += m.get("n_deferred", 0)
+        self.total_new_links += m.get("n_new_links", 0)
+
     def summary(self) -> str:
         return (
             f"waves={self.waves} fetched={self.total_fetched} ok={self.total_ok} "
@@ -165,8 +174,9 @@ class CrawlEngine:
             config.bloom_bits_per_shard,
             config.bloom_num_hashes,
         )
-        self._rules = robots_rules_per_host(robots) if robots is not None else None
-        self._budgets = budget_per_host(robots, config.politeness_budget)
+        # the per-run robots rule and budget tables (_load_run_state)
+        self._rules: DataFrame | None = None
+        self._budgets: DataFrame | None = None
         # cumulative (host, _taken) fetch-attempt counts — the
         # max_pages_per_host trap-guard state. None until the first wave
         # fetches; every run() rebuilds it from committed fetchlog
@@ -250,17 +260,21 @@ class CrawlEngine:
     _pending_frontier_count: int | None = None
 
     # ------------------------------------------------------------------
-    def seed_frontier(self, seeds: DataFrame) -> None:
-        """A3: seed injection with the literal linked_from='start' sentinel
-        (brink.go:33)."""
-        frontier0 = seeds.select(
+    @staticmethod
+    def _seed_rows(seeds: DataFrame) -> DataFrame:
+        """A3: seeds as frontier rows with the literal linked_from='start'
+        sentinel (brink.go:33) at depth 0."""
+        return seeds.select(
             F.lit("start").alias("linked_from"),
             F.col("url"),
             F.col("priority").cast("int").alias("priority"),
             F.lit(0).alias("depth"),
         )
+
+    def seed_frontier(self, seeds: DataFrame) -> None:
+        """Write ``seeds`` as the wave-0 frontier."""
         obs = Observation("seed_frontier")
-        frontier0 = frontier0.observe(obs, F.count(F.lit(1)).alias("n"))
+        frontier0 = self._seed_rows(seeds).observe(obs, F.count(F.lit(1)).alias("n"))
         self.store.write(frontier0, "frontier", 0)
         self._pending_frontier_count = obs.get["n"]
 
@@ -471,7 +485,13 @@ class CrawlEngine:
         """Set the lifetime counts to the fold of every COMMITTED fetchlog
         attempt through ``last_wave``. Overwrites in-memory state from a
         crashed in-process run or an earlier run of this engine; with no
-        committed wave (a fresh run) every count is None."""
+        committed wave (a fresh run) every count is None.
+
+        Preblocked templates (the streaming monitor's feedback path,
+        streaming/template_monitor.py) enter the run already saturated —
+        merged as MAX with the folded counts, so a template is saturated
+        whether the evidence came from this store's fetchlog or from the
+        online monitor."""
         self._host_taken = self._template_taken = self._miss_counts = None
         cfg = self.config
         counted = max(
@@ -483,6 +503,151 @@ class CrawlEngine:
                     F.col("outcome").isin(*ATTEMPT_OUTCOMES)
                 )
             )
+        if cfg.max_pages_per_template > 0 and cfg.preblocked_templates:
+            pre = self.spark.createDataFrame(
+                [(t, cfg.max_pages_per_template) for t in cfg.preblocked_templates],
+                "template string, _ttaken long",
+            )
+            if self._template_taken is not None:
+                pre = (
+                    self._template_taken.unionByName(pre)
+                    .groupBy("template")
+                    .agg(F.max("_ttaken").alias("_ttaken"))
+                )
+            self._template_taken = pre.localCheckpoint(eager=True)
+
+    def _sitemap_seeds(self, seeds: DataFrame) -> DataFrame:
+        """Sitemap bootstrap: each entry host's robots.txt ``Sitemap:`` lines
+        resolve to sitemap XML in the pages table; parsed URLs join wave 0
+        as ordinary seeds (their mapped priority decides fetch order). The
+        entry list collect is bounded: seed lists are human-provided
+        config, never corpus-sized."""
+        if not self.config.sitemap_discovery:
+            return seeds
+        if self.pages is None:
+            # http mode has no pages table to resolve robots/sitemap
+            # bodies against — warn instead of silently no-opping the
+            # accepted TOML key (a live-crawl sitemap fetch stage is a
+            # deliberate non-goal: wave-0 bootstrap would need its own
+            # fetch round-trip before the frontier exists)
+            import warnings
+
+            warnings.warn(
+                "sitemap_discovery=True but the engine has no pages "
+                "table (fetch_mode='http'): no sitemap seeds will be "
+                "discovered",
+                stacklevel=4,  # run()'s caller
+            )
+            return seeds
+        from brink_spark.sources.sitemap import discover_sitemap_seeds
+
+        entry = [r["url"] for r in seeds.select("url").collect()]
+        disc = discover_sitemap_seeds(
+            self.pages,
+            entry,
+            self.norm_udf,
+            self.config.ignore_get_parameters,
+            self.config.fuzzy_get_parameter_checks,
+        )
+        return seeds.select("url", F.col("priority").cast("int")).unionByName(
+            disc.select("url", F.col("priority").cast("int"))
+        )
+
+    def _open(
+        self, fixture, seeds: DataFrame | None, resume: bool
+    ) -> tuple[Manifest, int]:
+        """Bind the fixture's tables, then open the store at the first wave
+        to run. A fresh run resets the store, writes the wave-0 frontier
+        and resets the request state. A resume drops uncommitted partials,
+        restores the request state committed with the last wave and unions
+        any new seeds into the next wave's frontier."""
+        if fixture is not None:
+            from brink_spark.sources.sitegen import (
+                pages_to_spark,
+                robots_to_spark,
+                seeds_to_spark,
+            )
+
+            if self.pages is None:
+                self.pages = pages_to_spark(self.spark, fixture)
+            if self.robots is None:
+                self.robots = robots_to_spark(self.spark, fixture)
+            if seeds is None and not resume:
+                seeds = seeds_to_spark(self.spark, fixture)
+
+        manifest = self.store.read_manifest() if resume else None
+        if manifest is None:
+            if seeds is None:  # checked before the reset wipes the store
+                raise ValueError("fresh run requires seeds")
+            self.store.reset()
+            self.seed_frontier(self._sitemap_seeds(seeds))
+            # an earlier run of this engine may have grown the jar
+            self._reset_request_state()
+            return Manifest(), 0
+
+        wave = manifest.last_wave + 1
+        self.store.clean_uncommitted(manifest.last_wave)
+        # any carried frontier count may describe a wave the crash threw
+        # away — recount once from parquet instead
+        self._pending_frontier_count = None
+        # cookies from committed waves survive a crash; the suppressed
+        # Authorization header stays suppressed. Pre-jar manifests (None)
+        # keep the constructor's config-derived jar.
+        if manifest.cookie_jar is not None:
+            self.cookie_jar = dict(manifest.cookie_jar)
+            self.auth_suppressed_since_wave = manifest.auth_suppressed_since_wave
+            self._check_auth_suppression(wave)
+        # new seeds on resume (the recrawl companion to expire_visited)
+        if seeds is not None:
+            extra = self._seed_rows(seeds)
+            if self.store.has("frontier", wave):
+                existing = self.store.read(self.spark, "frontier", wave).select(
+                    "linked_from", "url", "priority", "depth"
+                )
+                extra = existing.unionByName(extra)
+            self.store.rewrite(extra, "frontier", wave)
+        return manifest, wave
+
+    def _load_run_state(self, manifest: Manifest) -> DataFrame | None:
+        """Bind the per-run state every wave reads and return the prepared
+        pages side (``_prepare_pages``). The trap-guard and retry counts
+        come from the store, never from an earlier run of this engine.
+
+        The robots rule table and the per-host budget table are CONSTANT
+        within a run, yet both are groupBy aggregations whose subtree would
+        be re-planned and re-executed inside every wave's plan (twice where
+        the politeness union references them from both branches). One eager
+        localCheckpoint each turns every wave's occurrence into a broadcast
+        of a concrete host-sized relation, O(#hosts) at any scale.
+
+        HTTP-304-style fast path: the expired-entry hash set is bounded by
+        the tombstone count and checkpointed, so the per-wave left join
+        broadcasts a tiny relation instead of re-scanning visited."""
+        cfg = self.config
+        self._rebuild_attempts(manifest.last_wave)
+        self._rules = self._budgets = None
+        if self.robots is not None:
+            self._rules = robots_rules_per_host(self.robots).localCheckpoint(
+                eager=True
+            )
+            self._budgets = budget_per_host(
+                self.robots, cfg.politeness_budget
+            ).localCheckpoint(eager=True)
+        pages_slim = self._prepare_pages()
+        self._prior_hashes = None
+        if cfg.refetch_skip_unchanged:
+            ph = self.store.read_expired_visited(self.spark, manifest)
+            if ph is not None:
+                self._prior_hashes = ph.localCheckpoint(eager=True)
+        return pages_slim
+
+    def _commit_wave(self, finish, manifest: Manifest, m: dict) -> None:
+        """Make one wave durable: drain its deferred writes (``finish``),
+        swap the manifest, then tell ``on_wave_committed``."""
+        finish()
+        self.store.commit(manifest)
+        if self.on_wave_committed is not None:
+            self.on_wave_committed(m)
 
     def run(
         self,
@@ -491,254 +656,69 @@ class CrawlEngine:
         resume: bool = False,
         max_waves: int | None = None,
     ) -> CrawlSummary:
-        from brink_spark.sources.sitegen import (
-            pages_to_spark,
-            robots_to_spark,
-            seeds_to_spark,
-        )
+        """Crawl waves until the frontier empties, ``max_waves`` is reached
+        or ``request_stop()`` is called: ``_open`` the store, ``_load_run_state``,
+        then per wave ``_run_wave``, advance the in-memory manifest and
+        submit ``_commit_wave`` to a one-worker commit pool.
 
-        if fixture is not None:
-            if self.pages is None:
-                self.pages = pages_to_spark(self.spark, fixture)
-            if self.robots is None:
-                self.robots = robots_to_spark(self.spark, fixture)
-                self._rules = robots_rules_per_host(self.robots)
-                self._budgets = budget_per_host(self.robots, self.config.politeness_budget)
-            if seeds is None and not resume:
-                seeds = seeds_to_spark(self.spark, fixture)
-
-        max_waves = max_waves if max_waves is not None else self.config.max_waves
-        summary = CrawlSummary()
-        t0 = time.time()
-
-        manifest = self.store.read_manifest() if resume else None
-        if manifest is None:
-            self.store.reset()
-            if seeds is None:
-                raise ValueError("fresh run requires seeds")
-            # sitemap bootstrap: each entry host's robots.txt `Sitemap:`
-            # lines resolve to sitemap XML in the pages table; parsed URLs
-            # join wave 0 as ordinary seeds (their mapped priority decides
-            # fetch order). The entry list collect is bounded: seed lists
-            # are human-provided config, never corpus-sized.
-            if self.config.sitemap_discovery and self.pages is None:
-                # http mode has no pages table to resolve robots/sitemap
-                # bodies against — warn instead of silently no-opping the
-                # accepted TOML key (a live-crawl sitemap fetch stage is a
-                # deliberate non-goal: wave-0 bootstrap would need its own
-                # fetch round-trip before the frontier exists)
-                import warnings
-
-                warnings.warn(
-                    "sitemap_discovery=True but the engine has no pages "
-                    "table (fetch_mode='http'): no sitemap seeds will be "
-                    "discovered",
-                    stacklevel=2,
-                )
-            if self.config.sitemap_discovery and self.pages is not None:
-                from brink_spark.sources.sitemap import discover_sitemap_seeds
-
-                entry = [r["url"] for r in seeds.select("url").collect()]
-                disc = discover_sitemap_seeds(
-                    self.pages,
-                    entry,
-                    self.norm_udf,
-                    self.config.ignore_get_parameters,
-                    self.config.fuzzy_get_parameter_checks,
-                )
-                seeds = (
-                    seeds.select("url", F.col("priority").cast("int"))
-                    .unionByName(
-                        disc.select("url", F.col("priority").cast("int"))
+        Cross-wave pipelining: wave N's deferred writes (fetchlog, results,
+        lineage, metrics) and manifest commit drain on the commit worker
+        WHILE wave N+1's stage job runs (``pipeline_waves=False`` joins each
+        commit right after submitting it). The commit Future is joined
+        after each ``_run_wave`` (one commit in flight; its error surfaces
+        before the manifest moves on), before a rank boundary (its
+        ``_compute_ranks`` reads the previous wave's deferred results) and
+        before compaction (it rewrites manifest-tracked state). The
+        in-memory manifest advances before the commit is submitted, so wave
+        N+1 sees last_wave=N; the DISK commit still happens strictly after
+        every wave-N write, so crash-resume semantics are unchanged. A loop
+        failure chains a failed in-flight commit as its ``__cause__``."""
+        cfg = self.config
+        max_waves = cfg.max_waves if max_waves is None else max_waves
+        summary, t0 = CrawlSummary(), time.time()
+        manifest, wave = self._open(fixture, seeds, resume)
+        pages_slim = self._load_run_state(manifest)
+        K = cfg.rank_priority_every
+        with ThreadPoolExecutor(max_workers=1) as committer:
+            commit = committer.submit(lambda: None)  # the in-flight wave commit
+            try:
+                while wave < max_waves and not self._stop_requested:
+                    if K > 0 and wave > 0 and wave % K == 0:
+                        commit.result()  # a rank boundary reads deferred results
+                    out = self._run_wave(wave, manifest, pages_slim)
+                    commit.result()
+                    if out is None:  # empty frontier → graceful stop (F2)
+                        break
+                    m, finish = out
+                    manifest.last_wave = wave
+                    manifest.total_visited += m.get("n_ok", 0) + m.get(
+                        "n_not_modified", 0
                     )
-                )
-            self.seed_frontier(seeds)
-            # an earlier run of this engine may have grown the jar
-            self._reset_request_state()
-            manifest = Manifest()
-            wave = 0
-        else:
-            wave = manifest.last_wave + 1
-            self.store.clean_uncommitted(manifest.last_wave)
-            # any carried frontier count may describe a wave the crash threw
-            # away — recount once from parquet instead
-            self._pending_frontier_count = None
-            # restore the runtime request state committed with the last wave
-            # (cookies from committed waves survive a crash; the suppressed
-            # Authorization header stays suppressed). Pre-jar manifests
-            # (None) keep the constructor's config-derived jar.
-            if manifest.cookie_jar is not None:
-                self.cookie_jar = dict(manifest.cookie_jar)
-                self.auth_suppressed_since_wave = manifest.auth_suppressed_since_wave
-                self._check_auth_suppression(wave)
-            # new seeds on resume: continue the crawl with extra entry
-            # points (the recrawl companion to expire_visited) — union them
-            # into the next wave's frontier
-            if seeds is not None:
-                extra = seeds.select(
-                    F.lit("start").alias("linked_from"),
-                    F.col("url"),
-                    F.col("priority").cast("int").alias("priority"),
-                    F.lit(0).alias("depth"),
-                )
-                if self.store.has("frontier", wave):
-                    existing = self.store.read(self.spark, "frontier", wave).select(
-                        "linked_from", "url", "priority", "depth"
+                    manifest.cookie_jar = dict(self.cookie_jar)
+                    manifest.auth_suppressed_since_wave = (
+                        self.auth_suppressed_since_wave
                     )
-                    extra = existing.unionByName(extra)
-                self.store.rewrite(extra, "frontier", wave)
-
-        # the trap-guard and retry counts come from the store, never from an
-        # earlier run of this engine
-        self._rebuild_attempts(manifest.last_wave)
-
-        # preblocked templates (the streaming monitor's feedback path,
-        # streaming/template_monitor.py): enter the run already saturated
-        # — merged as MAX with any resumed counts, so a template is
-        # saturated whether the evidence came from this store's fetchlog
-        # or from the online monitor
-        if (
-            self.config.max_pages_per_template > 0
-            and self.config.preblocked_templates
-        ):
-            pre = self.spark.createDataFrame(
-                [
-                    (t, self.config.max_pages_per_template)
-                    for t in self.config.preblocked_templates
-                ],
-                "template string, _ttaken long",
-            )
-            tmerged = (
-                pre
-                if self._template_taken is None
-                else self._template_taken.unionByName(pre)
-                .groupBy("template")
-                .agg(F.max("_ttaken").alias("_ttaken"))
-            )
-            self._template_taken = tmerged.localCheckpoint(eager=True)
-
-        # Per-run CONSTANT relations, materialized once: the robots rule
-        # table and the per-host budget table never change within a run,
-        # yet both are groupBy aggregations whose full agg→exchange→agg
-        # subtree was re-planned and re-executed inside EVERY wave's plan
-        # (and twice where the politeness union references them from both
-        # branches). One eager localCheckpoint each turns every later wave's
-        # occurrence into a broadcast of a concrete host-sized RDD — the
-        # same treatment _host_taken already gets. Size is O(#hosts) at any
-        # scale, the same bound the broadcast itself already assumes.
-        if self._rules is not None:
-            self._rules = self._rules.localCheckpoint(eager=True)
-        if self._budgets is not None:
-            self._budgets = self._budgets.localCheckpoint(eager=True)
-
-        pages_slim = self._prepare_pages()
-
-        # HTTP-304-style fast path: bind the expired-entry hash set for
-        # this run (bounded by the tombstone count; localCheckpoint so the
-        # per-wave left join broadcasts a concrete tiny relation instead
-        # of re-scanning visited every wave)
-        self._prior_hashes = None
-        if self.config.refetch_skip_unchanged:
-            ph = self.store.read_expired_visited(self.spark, manifest)
-            if ph is not None:
-                self._prior_hashes = ph.localCheckpoint(eager=True)
-
-        # cross-wave pipelining: wave N's deferred writes (fetchlog,
-        # results, lineage, metrics) + manifest commit drain on a driver
-        # thread WHILE wave N+1's stage job runs. Join points: (a) after
-        # each _run_wave returns (one finalize in flight at a time, and
-        # errors surface before the next commit), (b) before a rank
-        # boundary (its _compute_ranks reads the previous wave's deferred
-        # results table), (c) before compaction (rewrites manifest-tracked
-        # state). In-memory manifest state advances before the commit
-        # thread starts so wave N+1 sees last_wave=N; the DISK commit
-        # still happens strictly after every wave-N write — crash-resume
-        # semantics unchanged.
-        import threading
-
-        pending: threading.Thread | None = None
-        pending_err: list[BaseException] = []
-
-        def _join_pending():
-            nonlocal pending
-            if pending is not None:
-                pending.join()
-                pending = None
-                if pending_err:
-                    raise pending_err[0]
-
-        K = self.config.rank_priority_every
-        try:
-            while wave < max_waves:
-                if self._stop_requested:  # request_stop(): as an empty frontier
-                    break
-                if K > 0 and wave > 0 and wave % K == 0:
-                    _join_pending()  # rank boundary reads deferred results
-                out = self._run_wave(wave, manifest, pages_slim)
-                _join_pending()
-                if out is None:  # empty frontier → graceful stop (F2)
-                    break
-                m, finish = out
-                manifest.last_wave = wave
-                manifest.total_visited += m.get("n_ok", 0) + m.get(
-                    "n_not_modified", 0
-                )
-                manifest.cookie_jar = dict(self.cookie_jar)
-                manifest.auth_suppressed_since_wave = (
-                    self.auth_suppressed_since_wave
-                )
-
-                def _finalize(fin=finish, wm=m):
-                    try:
-                        fin()
-                        self.store.commit(manifest)
-                        if self.on_wave_committed is not None:
-                            self.on_wave_committed(wm)
-                    except BaseException as e:  # surfaced at the next join
-                        pending_err.append(e)
-
-                if self.config.pipeline_waves:
-                    pending = threading.Thread(target=_finalize, daemon=True)
-                    pending.start()
-                else:  # synchronous mode: finalize inline, errors raise now
-                    _finalize()
-                    if pending_err:
-                        raise pending_err[0]
-                summary.wave_metrics.append(m)
-                summary.total_fetched += m.get("n_fetched", 0)
-                summary.total_ok += m.get("n_ok", 0)
-                summary.total_cached += m.get("n_cached", 0)
-                summary.total_deferred += m.get("n_deferred", 0)
-                summary.total_new_links += m.get("n_new_links", 0)
-                if (
-                    self.config.compact_visited_every > 0
-                    and (wave + 1) % self.config.compact_visited_every == 0
-                ):
-                    _join_pending()
-                    self.store.compact_visited(self.spark, manifest)
-                wave += 1
-            _join_pending()
-        except BaseException as loop_err:
-            # primary failure mid-loop must still JOIN the in-flight
-            # finalize thread for the PREVIOUS wave — a daemon commit
-            # killed at interpreter exit could leave a half-written
-            # manifest, and its buffered pending_err would vanish. The
-            # primary exception propagates; a prior-wave finalize failure
-            # chains as its __cause__ instead of being dropped.
-            if pending is not None:
-                pending.join()
-                pending = None
-            if pending_err and pending_err[0] is not loop_err:
-                raise loop_err from pending_err[0]
-            raise
-        finally:
-            # a stop request ends this run only, however the run ends
-            self._stop_requested = False
-
+                    commit = committer.submit(self._commit_wave, finish, manifest, m)
+                    if not cfg.pipeline_waves:
+                        commit.result()
+                    summary.add(m)
+                    if cfg.compact_visited_every > 0 and (
+                        (wave + 1) % cfg.compact_visited_every == 0
+                    ):
+                        commit.result()
+                        self.store.compact_visited(self.spark, manifest)
+                    wave += 1
+                commit.result()
+            except BaseException as err:  # .exception() joins the commit
+                if commit.exception() not in (None, err):
+                    raise err from commit.exception()
+                raise
+            finally:
+                # a stop request ends this run only, however the run ends
+                self._stop_requested = False
         manifest.done = True
         self.store.commit(manifest)
-        summary.waves = wave
-        summary.wall_seconds = time.time() - t0
+        summary.waves, summary.wall_seconds = wave, time.time() - t0
         return summary
 
     # ------------------------------------------------------------------

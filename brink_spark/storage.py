@@ -152,18 +152,25 @@ class CrawlStore:
         os.makedirs(self._tombstone_dir, exist_ok=True)
         out.write.mode("append").parquet(self._tombstone_dir)
 
-    def _apply_tombstones(self, spark, df):
+    def _tombstones(self, spark):
+        """``(url_norm, _exp)``: each tombstoned url's latest expiry wave,
+        or None while no tombstone has been written."""
         from pyspark.sql import functions as F
 
-        if df is None or not os.path.isdir(self._tombstone_dir):
-            return df
+        if not os.path.isdir(self._tombstone_dir):
+            return None
         try:
             tomb = spark.read.parquet(self._tombstone_dir)
         except Exception:  # dir exists but holds no parquet yet
+            return None
+        return tomb.groupBy("url_norm").agg(F.max("expired_asof_wave").alias("_exp"))
+
+    def _apply_tombstones(self, spark, df):
+        from pyspark.sql import functions as F
+
+        mx = self._tombstones(spark) if df is not None else None
+        if mx is None:
             return df
-        mx = tomb.groupBy("url_norm").agg(
-            F.max("expired_asof_wave").alias("_exp")
-        )
         return (
             df.join(mx, "url_norm", "left")
             .filter(F.col("wave") > F.coalesce(F.col("_exp"), F.lit(-1)))
@@ -187,18 +194,12 @@ class CrawlStore:
         from pyspark.sql import functions as F
 
         paths = self.visited_paths(manifest)
-        if not paths or not os.path.isdir(self._tombstone_dir):
-            return None
-        try:
-            tomb = spark.read.parquet(self._tombstone_dir)
-        except Exception:
+        mx = self._tombstones(spark) if paths else None
+        if mx is None:
             return None
         df = spark.read.parquet(*paths)
         if "content_hash" not in df.columns:
             return None
-        mx = tomb.groupBy("url_norm").agg(
-            F.max("expired_asof_wave").alias("_exp")
-        )
         return (
             df.join(mx, "url_norm")
             .filter(F.col("wave") <= F.col("_exp"))
@@ -227,7 +228,8 @@ class CrawlStore:
         snapshot instead. For ``visited`` the compacted rollup is used when
         it covers the requested wave; waves BELOW the compaction horizon are
         no longer travelable (compaction is snapshot expiry, exactly like
-        Iceberg's expire_snapshots) — returns None there."""
+        Iceberg's expire_snapshots) — returns None there. Tombstones are
+        not applied: a time-travel read shows the pre-expiry history."""
         if table not in self.APPEND_TABLES:
             # snapshot layout: one dir per wave, later waves supersede
             if not self.has(table, wave):
@@ -235,16 +237,10 @@ class CrawlStore:
             return self.read(spark, table, wave)
         if table == "visited":
             m = self.read_manifest() or Manifest()
-            if 0 <= m.compacted_upto <= wave:
-                paths = [self.compacted_dir(m.compacted_upto)]
-                start = m.compacted_upto + 1
-            else:
-                paths, start = [], 0
-            paths += [
-                self.wave_dir("visited", w)
-                for w in range(start, wave + 1)
-                if self.has("visited", w)
-            ]
+            if m.compacted_upto > wave:
+                return None  # below the compaction horizon: snapshot expired
+            shadow = Manifest(last_wave=wave, compacted_upto=m.compacted_upto)
+            paths = self.visited_paths(shadow)
         else:
             paths = [
                 self.wave_dir(table, w)

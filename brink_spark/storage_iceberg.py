@@ -131,7 +131,8 @@ class IcebergCrawlStore(CrawlStore):
         )
 
     # -- visited read path ----------------------------------------------------
-    def read_visited(self, spark, manifest: Manifest):
+    def _read_visited_raw(self, spark, manifest: Manifest):
+        """The visited rows as of ``manifest``, tombstones not applied."""
         parts = []
         start = 0
         if manifest.compacted_upto >= 0 and self._exists("visited_compacted"):
@@ -155,9 +156,12 @@ class IcebergCrawlStore(CrawlStore):
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
+        return df
+
+    def read_visited(self, spark, manifest: Manifest):
         # tombstones (visited-entry expiry) are driver-side parquet beside
         # the manifest — shared mechanics with the parquet backend
-        return self._apply_tombstones(spark, df)
+        return self._apply_tombstones(spark, self._read_visited_raw(spark, manifest))
 
     def read_asof(self, spark, table: str, wave: int):
         if table not in self.APPEND_TABLES:
@@ -167,7 +171,7 @@ class IcebergCrawlStore(CrawlStore):
             if m.compacted_upto > wave:
                 return None  # below the compaction horizon: snapshot expired
             shadow = Manifest(last_wave=wave, compacted_upto=m.compacted_upto)
-            return self.read_visited(spark, shadow)
+            return self._read_visited_raw(spark, shadow)  # pre-expiry history
         if not self._exists(table):
             return None
         return (

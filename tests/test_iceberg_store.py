@@ -8,6 +8,7 @@ parametrization still pins the contract both backends implement:
 - clean_uncommitted drops exactly the waves past the manifest pointer
   (frontier keeps one extra: wave K's commit includes frontier K+1),
 - read_visited / read_asof honor the compaction horizon,
+- tombstones filter read_visited but not the time-travel read_asof,
 - the full engine runs + resumes against the store unchanged.
 """
 
@@ -100,6 +101,25 @@ def test_read_visited_asof_and_compaction_horizon(spark, store):
     assert {
         r["url_norm"] for r in store.read_asof(spark, "visited", 3).collect()
     } == all_keys
+
+
+def test_asof_visited_keeps_pre_expiry_history(spark, store):
+    """Tombstones filter the LIVE seen set only: after expiry read_visited
+    drops the url, while a time-travel read still returns its row."""
+    man = Manifest()
+    for w in range(2):
+        store.write(_df(spark, [(f"u{w}", 200, w)]), "visited", w)
+        man.last_wave = w
+        store.commit(man)
+    store.write_tombstones(
+        spark.createDataFrame([("u0",)], "url_norm string"), man.last_wave
+    )
+    assert {r["url_norm"] for r in store.read_visited(spark, man).collect()} == {
+        "u1"
+    }
+    assert {
+        r["url_norm"] for r in store.read_asof(spark, "visited", 1).collect()
+    } == {"u0", "u1"}
 
 
 def test_snapshot_table_asof_returns_single_wave(spark, store):

@@ -4,7 +4,16 @@ equivalence, span parser UDF, robots longest-prefix logic."""
 from pyspark.sql import Window, functions as F
 
 from brink_spark.operators.politeness import apply_politeness
-from brink_spark.operators.seen import BloomSeenSet, split_seen
+from brink_spark.operators.seen import BloomSeenSet, mark_seen
+
+
+def _fresh_cached(edges, visited, bloom=None, shards=None):
+    """mark_seen's one table split on its status: (fresh, cached) edges."""
+    marked = mark_seen(edges, visited, bloom, shards)
+    return (
+        marked.filter(F.col("status").isNull()),
+        marked.filter(F.col("status").isNotNull()),
+    )
 
 
 def _urls_df(spark, prefix, n):
@@ -52,7 +61,7 @@ def test_bloom_incremental_build_equals_batch_build(spark):
     assert incremental == batch
 
 
-def test_split_seen_bloom_equals_exact(spark):
+def test_mark_seen_bloom_equals_exact(spark):
     """The Bloom prefilter must not change the fresh/cached split."""
     edges = spark.range(300).select(
         F.concat(F.lit("https://s.example/p"), F.col("id")).alias("url_norm"),
@@ -68,8 +77,8 @@ def test_split_seen_bloom_equals_exact(spark):
     bloom = BloomSeenSet(4, 1 << 16, 5)
     shards = bloom.updated(visited, bloom.empty(spark)).cache()
 
-    fresh_e, cached_e = split_seen(edges, visited)
-    fresh_b, cached_b = split_seen(edges, visited, bloom, shards)
+    fresh_e, cached_e = _fresh_cached(edges, visited)
+    fresh_b, cached_b = _fresh_cached(edges, visited, bloom, shards)
     assert sorted(r["url_norm"] for r in fresh_e.collect()) == sorted(
         r["url_norm"] for r in fresh_b.collect()
     )
@@ -108,12 +117,10 @@ def test_politeness_two_phase_equals_single_window(spark):
 
 
 def test_mark_seen_single_table_equals_split(spark):
-    """mark_seen is the wave loop's single-table form of split_seen: the
-    status column must partition the input exactly into the split's
-    (fresh, cached) halves, with and without the Bloom prefilter, and
+    """mark_seen's status column must partition the input exactly into
+    (fresh, cached) halves, with and without the Bloom prefilter, the
+    same when the null/non-null filters are pushed into the plan, and
     must carry the stored status for every cached row."""
-    from brink_spark.operators.seen import mark_seen
-
     edges = spark.range(300).select(
         F.concat(F.lit("https://m.example/p"), F.col("id")).alias("url_norm"),
         F.lit("parent").alias("linked_from"),
@@ -139,7 +146,7 @@ def test_mark_seen_single_table_equals_split(spark):
         cached = {r["url_norm"]: r["status"] for r in marked if r["status"] is not None}
         assert cached == want_status
         assert fresh.isdisjoint(cached)
-        f_df, c_df = split_seen(edges, visited, b, s)
+        f_df, c_df = _fresh_cached(edges, visited, b, s)
         assert fresh == {r["url_norm"] for r in f_df.collect()}
         assert cached == {
             r["url_norm"]: r["status"] for r in c_df.collect()
@@ -217,8 +224,8 @@ def test_bloom_stale_bits_fall_through_to_exact_join(spark):
     )
 
     assert all(r["maybe_seen"] for r in bloom.probe(expired, shards).collect())
-    fresh_b, cached_b = split_seen(edges, visited, bloom, shards)
-    fresh_e, cached_e = split_seen(edges, visited)
+    fresh_b, cached_b = _fresh_cached(edges, visited, bloom, shards)
+    fresh_e, cached_e = _fresh_cached(edges, visited)
     fresh = {r["url_norm"] for r in fresh_b.collect()}
     assert fresh == {r["url_norm"] for r in fresh_e.collect()}
     assert {r["url_norm"] for r in expired.collect()} <= fresh
@@ -235,8 +242,8 @@ def test_saturated_bloom_stays_safe(spark):
     shards = bloom.updated(visited, bloom.empty(spark)).cache()
     assert bloom.probe(visited, shards).filter(~F.col("maybe_seen")).count() == 0
     edges = _urls_df(spark, "sat", 800).withColumn("linked_from", F.lit("p"))
-    fresh_b, cached_b = split_seen(edges, visited, bloom, shards)
-    fresh_e, cached_e = split_seen(edges, visited)
+    fresh_b, cached_b = _fresh_cached(edges, visited, bloom, shards)
+    fresh_e, cached_e = _fresh_cached(edges, visited)
     assert {r["url_norm"] for r in fresh_b.collect()} == {
         r["url_norm"] for r in fresh_e.collect()
     }
@@ -250,8 +257,6 @@ def test_mark_seen_keeps_duplicate_edges_under_bloom(spark):
     without the prefilter, mark_seen returns every edge row exactly once,
     each tagged with the URL's stored status."""
     from collections import Counter
-
-    from brink_spark.operators.seen import mark_seen
 
     targets = _urls_df(spark, "d", 60)
     edges = targets.crossJoin(

@@ -2,7 +2,7 @@
 
 - LSH near-dup soundness: every pair the bucketed path reports is in the
   brute-force pair set (exactness on the candidate set — the same superset
-  contract test_split_seen_bloom_equals_exact pins for the Bloom filter).
+  contract test_mark_seen_bloom_equals_exact pins for the Bloom filter).
 - LSH recall at the operating point: near-dup in production means
   cosine >= ~0.9 (planted duplicates), where per-bit sign agreement is
   p = 1 - arccos(0.9)/pi ~ 0.86 and 2x8-bit tables recall ~1. The sf

@@ -6,6 +6,7 @@ import os
 from brink_spark.oracle import crawl_oracle
 from brink_spark.plans.compare import compare_engine_oracle
 from brink_spark.plans.crawl import CrawlEngine
+from brink_spark.storage import CrawlStore, Manifest
 
 WAVES = 6
 
@@ -195,3 +196,44 @@ def test_resume_with_new_seed_converges_to_union_crawl(spark, tmp_path):
             for s in (r["spans"] or [])
         ]
         assert have == want, r["url_norm"]
+
+
+class _FailingResultsStore(CrawlStore):
+    """Fails wave 1's results write: a DEFERRED write, so the failure
+    surfaces in that wave's commit, after wave 1's gating writes landed."""
+
+    def write(self, df, table, wave):
+        if (table, wave) == ("results", 1):
+            raise RuntimeError("injected results write failure")
+        return super().write(df, table, wave)
+
+
+@pytest.mark.parametrize("pipeline_waves", [True, False])
+def test_deferred_write_failure_leaves_wave_uncommitted(
+    spark, tiny_fixture, tmp_path, pipeline_waves
+):
+    """A failed deferred write fails run() with that error, in both commit
+    modes: the manifest still names the last fully committed wave, and
+    on_wave_committed fired only for it."""
+    store_dir = str(tmp_path / "store")
+    cfg = tiny_fixture.config.with_(pipeline_waves=pipeline_waves)
+    engine = CrawlEngine(
+        spark, cfg, store_dir, store=_FailingResultsStore(store_dir)
+    )
+    committed = []
+    engine.on_wave_committed = lambda m: committed.append(m["wave"])
+    with pytest.raises(RuntimeError, match="injected results write failure"):
+        engine.run(fixture=tiny_fixture, max_waves=2)
+    assert engine.store.read_manifest().last_wave == 0
+    assert committed == [0]
+
+
+def test_fresh_run_without_seeds_keeps_store(spark, tiny_fixture, tmp_path):
+    """A fresh run with no seeds is rejected before it resets the store, so
+    a mistaken call cannot wipe a committed crawl."""
+    store_dir = str(tmp_path / "store")
+    engine = CrawlEngine(spark, tiny_fixture.config, store_dir)
+    engine.store.commit(Manifest(last_wave=3))
+    with pytest.raises(ValueError, match="requires seeds"):
+        engine.run()
+    assert engine.store.read_manifest().last_wave == 3

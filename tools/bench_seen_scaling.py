@@ -2,18 +2,21 @@
 
 The reference's whole dedup state is one in-memory hash map
 (store/store.go:9-12); the 10^10-frontier design here is the sharded
-Bloom prefilter + exact anti/inner join (operators/seen.py split_seen).
-This bench times exactly that per-wave path — probe 2M frontier URLs
-against an 8M-entry visited set (64 Bloom shards, ~50% hit rate) and
-materialize both halves (fresh anti-join + cached inner join) — at two
-parallelism levels in fresh JVMs, alternated best-of-N, and reports
-URLs-checked/sec plus the N→4N scaling efficiency.
+Bloom prefilter + one exact left join (operators/seen.py mark_seen).
+This bench times exactly that per-wave path — probe 8M frontier URLs
+against a 32M-entry visited set (64 Bloom shards, 50% hit rate) and count
+the marked table's fresh and cached rows — at two parallelism levels in
+fresh JVMs, alternated best-of-N, and reports URLs-checked/sec plus the
+N→4N scaling efficiency.
 
 Usage:
     python tools/bench_seen_scaling.py prepare
     python tools/bench_seen_scaling.py run <cpus>
-    [BRINK_LEVELS=8,32] [BRINK_REPEATS=3] \
+    [BRINK_LEVELS=1,4] [BRINK_REPEATS=3] \
         python tools/bench_seen_scaling.py drive BENCH/seen_scaling_rN.json
+
+The level pair defaults to N→4N from the host: 4N is every cpu, N a
+quarter of them (1→4 on a 4-core host). BRINK_LEVELS overrides it.
 """
 
 from __future__ import annotations
@@ -38,6 +41,11 @@ N_FRONTIER = 8_000_000
 SHARDS = 64
 BITS_PER_SHARD = 1 << 23  # 1 MiB/shard, ~16 bits/key at 32M/64 -> low FP
 HASHES = 7
+NCPU = os.cpu_count() or 1
+LEVELS = tuple(
+    int(x)
+    for x in os.environ.get("BRINK_LEVELS", f"{max(1, NCPU // 4)},{NCPU}").split(",")
+)
 
 
 def _url(col):
@@ -62,7 +70,7 @@ def prepare() -> None:
     shutil.rmtree(WORK, ignore_errors=True)
     os.makedirs(WORK)
     spark = get_spark(
-        "local[32]", app_name="seen_prepare", shuffle_partitions=64,
+        f"local[{NCPU}]", app_name="seen_prepare", shuffle_partitions=64,
         extra={"spark.ui.showConsoleProgress": "false"},
     )
     visited = (
@@ -91,7 +99,7 @@ def prepare() -> None:
 
 
 def run_level(cpus: int) -> dict:
-    from brink_spark.operators.seen import BloomSeenSet, split_seen
+    from brink_spark.operators.seen import BloomSeenSet, mark_seen
     from brink_spark.session import get_spark
 
     spark = get_spark(
@@ -111,24 +119,22 @@ def run_level(cpus: int) -> dict:
     bloom = BloomSeenSet(SHARDS, BITS_PER_SHARD, HASHES)
     from pyspark.sql import functions as F
 
-    def both_counts(fresh, cached):
-        # the engine unions fresh+cached into one wave stage (plans/
-        # crawl.py fresh_flagged ∪ cached_flagged), so the bench
-        # materializes both halves in ONE job the same way — the probe
-        # and the single visited left-join run once, not once per half
-        both = fresh.select(F.lit("fresh").alias("kind")).unionByName(
-            cached.select(F.lit("cached").alias("kind"))
-        )
-        rows = {r["kind"]: r["n"] for r in both.groupBy("kind").agg(
-            F.count("*").alias("n")).collect()}
-        return rows.get("fresh", 0), rows.get("cached", 0)
+    def both_counts(marked):
+        # the engine marks every edge in one table and splits it on the
+        # status column, so the bench counts both halves in ONE job the
+        # same way — the probe and the visited left join run once
+        rows = {
+            r["fresh"]: r["n"]
+            for r in marked.groupBy(F.col("status").isNull().alias("fresh"))
+            .agg(F.count("*").alias("n"))
+            .collect()
+        }
+        return rows.get(True, 0), rows.get(False, 0)
 
     # warmup on a slice: codegen + Arrow worker pool, not the data path
-    both_counts(*split_seen(frontier.limit(10_000), visited, bloom, shards))
+    both_counts(mark_seen(frontier.limit(10_000), visited, bloom, shards))
     t0 = time.time()
-    n_fresh, n_cached = both_counts(
-        *split_seen(frontier, visited, bloom, shards)
-    )
+    n_fresh, n_cached = both_counts(mark_seen(frontier, visited, bloom, shards))
     wall = time.time() - t0
     assert n_cached == N_FRONTIER // 2, n_cached  # exact-join correctness
     assert n_fresh == N_FRONTIER - n_cached, n_fresh
@@ -145,19 +151,15 @@ def run_level(cpus: int) -> dict:
 
 
 def drive(out_path: str) -> None:
-    # primary N→4N pair is 2→8: past ~8 threads a single-JVM local-mode
-    # box saturates memory/allocation bandwidth on string-shuffle joins
-    # (one memory bus shared by all "executors"), which a real cluster
-    # does not — 8→32 numbers are recorded separately as a saturation
-    # datapoint, not the scaling criterion (see BENCH/BASELINE.md)
-    levels = tuple(
-        int(x) for x in os.environ.get("BRINK_LEVELS", "2,8").split(",")
-    )
+    # past ~8 threads a single-JVM local-mode box saturates memory/
+    # allocation bandwidth on string-shuffle joins (one memory bus shared
+    # by all "executors"), which a real cluster does not (see
+    # BENCH/BASELINE.md); set BRINK_LEVELS on a large host accordingly
     repeats = int(os.environ.get("BRINK_REPEATS", "3"))
     all_runs: list[dict] = []
     best: dict[int, dict] = {}
     for rep in range(repeats):
-        for cpus in levels:
+        for cpus in LEVELS:
             proc = subprocess.run(
                 [sys.executable, __file__, "run", str(cpus)],
                 capture_output=True, text=True, cwd=REPO,
@@ -174,11 +176,11 @@ def drive(out_path: str) -> None:
             )
             if cpus not in best or r["wall_sec"] < best[cpus]["wall_sec"]:
                 best[cpus] = r
-    lo, hi = levels
-    eff = best[hi]["urls_per_sec"] / ((hi // lo) * best[lo]["urls_per_sec"])
+    lo, hi = LEVELS
+    eff = best[hi]["urls_per_sec"] / ((hi / lo) * best[lo]["urls_per_sec"])
     report = {
         "workload": (
-            f"split_seen (Bloom probe + exact anti/inner join): "
+            f"mark_seen (Bloom probe + exact left join): "
             f"{N_FRONTIER:,} frontier URLs vs {N_VISITED:,} visited, "
             f"{SHARDS} shards, 50% hit rate"
         ),
@@ -186,7 +188,7 @@ def drive(out_path: str) -> None:
             f"alternated best-of-{repeats} per level, fresh JVM per run, "
             f"stores on /dev/shm"
         ),
-        "levels": {str(c): best[c] for c in levels},
+        "levels": {str(c): best[c] for c in LEVELS},
         "all_runs": all_runs,
         "scaling_efficiency": round(eff, 3),
         "target": 0.8,
